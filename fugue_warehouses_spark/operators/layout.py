@@ -25,12 +25,7 @@ import uuid
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _dir_bytes(spark: SparkSession, path: str) -> int:
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs.getContentSummary(p).getLength()
+from fugue_warehouses_spark.plans.commit import fs_path, replace
 
 
 def compact(
@@ -42,25 +37,20 @@ def compact(
     """Rewrite ``path`` into ~``target_file_mb``-sized files; returns
     the new file count.
 
-    The rewrite goes to a temp dir first and swaps in via rename, so a
-    concurrent reader sees either the old layout or the new one, never
-    a partial directory. Row order is not preserved (it never is under
+    The rewrite goes to a temp dir and is swapped in by
+    ``plans/commit.replace``: a concurrent reader sees the old layout or
+    the new one, or finds ``path`` absent between the swap's two
+    renames, never a partial directory; a failed swap restores the old
+    layout and raises. Row order is not preserved (it never is under
     distributed scans).
     """
-    total = _dir_bytes(spark, path)
+    fs, p = fs_path(spark, path)
+    total = fs.getContentSummary(p).getLength()
     n_files = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
     df = spark.read.format(fmt).load(path)
     tmp = f"{path}__compact_{uuid.uuid4().hex[:8]}"
     df.repartition(n_files).write.mode("overwrite").format(fmt).save(tmp)
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    dest = jvm.org.apache.hadoop.fs.Path(path)
-    src = jvm.org.apache.hadoop.fs.Path(tmp)
-    fs = dest.getFileSystem(conf)
-    trash = jvm.org.apache.hadoop.fs.Path(f"{path}__old_{uuid.uuid4().hex[:8]}")
-    fs.rename(dest, trash)
-    fs.rename(src, dest)
-    fs.delete(trash, True)
+    replace(spark, tmp, path)
     return n_files
 
 

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from fugue_warehouses_spark.plans import versioned as V
+
 _EPOCH_NTZ = "TIMESTAMP_NTZ '1970-01-01 00:00:00'"
 
 
@@ -118,17 +120,16 @@ def refresh_rollup(
     raw data. The store stays tiny (one row per bucket), so the
     combine step re-aggregates rollup rows, not events.
 
-    Durability: the store is a directory of versioned snapshots
-    (``store/v=N/``). A refresh reads the highest COMPLETE version
-    (``_SUCCESS`` present), writes the merged rollup to ``v=N+1``, and
-    only then garbage-collects older versions. There is no rename
-    window: readers always resolve to a complete snapshot, a crash
-    mid-write leaves an incomplete ``v=N+1`` that the next refresh
-    ignores and overwrites, and history is never discarded before the
-    replacement version is fully committed. Returns the refreshed
-    rollup frame (read back from the new version).
+    Durability: the store is a versioned store (``plans/versioned.py``,
+    ``store/v_NNNNN/``). A refresh reads the latest COMPLETE version,
+    publishes the merged rollup as a new version, and only then drops
+    older versions (``vacuum(keep_last=1)``). Readers always resolve to
+    a complete snapshot, a crashed refresh leaves only an unpublished
+    stage, and two concurrent refreshes publish distinct versions
+    instead of writing into one directory. Returns the store's latest
+    rollup after the refresh.
     """
-    delta = (
+    merged = (
         new_events.select(
             bucket_index(time_col, bucket_us).alias("bucket"),
             F.col(value_col),
@@ -136,51 +137,22 @@ def refresh_rollup(
         .groupBy("bucket")
         .agg(F.count("*").alias("n_events"), F.sum(value_col).alias("sum_value"))
     )
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    root = Path(store_path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    current = _latest_complete_version(fs, Path, store_path)
-    if current is not None:
-        old = spark.read.parquet(f"{store_path}/v={current}")
+    try:
+        old = V.read_version(spark, store_path)
+    except FileNotFoundError:
+        pass  # first refresh: the slice is the whole rollup
+    else:
         merged = (
-            old.unionByName(delta)
+            old.unionByName(merged)
             .groupBy("bucket")
             .agg(
                 F.sum("n_events").alias("n_events"),
                 F.sum("sum_value").alias("sum_value"),
             )
         )
-    else:
-        merged = delta
-    nxt = 1 if current is None else current + 1
-    new_dir = f"{store_path}/v={nxt}"
-    merged.write.mode("overwrite").parquet(new_dir)
-    # GC only after v=N+1 is complete; keep the just-written version
-    if fs.exists(root):
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if name.startswith("v=") and name != f"v={nxt}":
-                fs.delete(st.getPath(), True)
-    return spark.read.parquet(new_dir)
-
-
-def _latest_complete_version(fs, Path, store_path: str) -> int | None:
-    """Highest ``v=N`` under the store with a ``_SUCCESS`` marker."""
-    root = Path(store_path)
-    if not fs.exists(root):
-        return None
-    best = None
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not name.startswith("v="):
-            continue
-        try:
-            n = int(name[2:])
-        except ValueError:
-            continue
-        if fs.exists(Path(f"{store_path}/v={n}/_SUCCESS")):
-            best = n if best is None else max(best, n)
-    return best
+    V.write_version(merged, store_path, spark)
+    V.vacuum(spark, store_path, keep_last=1)
+    return V.read_version(spark, store_path)
 
 
 def rollup_cascade(

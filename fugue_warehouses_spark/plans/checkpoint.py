@@ -10,10 +10,10 @@ fingerprint, so re-running a pipeline skips recomputation.
 
 Storage is plain parquet under a checkpoint root (durable — survives
 session restart, unlike ``df.cache()``). All filesystem access goes
-through the Hadoop FileSystem API, so the root may be an object-store
-path (s3a://, gs://, abfs://) as well as a local directory; writes are
-write-to-temp + rename so concurrent sessions sharing a root never
-observe (or clobber) a half-written checkpoint.
+through the Hadoop FileSystem API; writes are staged in ``.tmp_*``
+and committed through ``plans/commit.py``, so concurrent sessions
+sharing a root never observe (or clobber) a half-written checkpoint
+where rename is atomic (local, HDFS — not object stores).
 
 Lifecycle mirrors the reference's temp-table TTL expiration
 (fugue_bigquery/client.py:186-194): checkpoints carry a modification
@@ -30,6 +30,15 @@ import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from fugue_warehouses_spark.plans.commit import (
+    STAGE_TTL_S,
+    fs_path,
+    is_complete,
+    publish,
+    replace,
+    sweep_stages,
+)
 
 
 def plan_fingerprint(df: DataFrame) -> str:
@@ -59,21 +68,8 @@ def _checkpoint_root(spark: SparkSession) -> str:
     )
 
 
-def _fs_and_path(spark: SparkSession, path_str: str):
-    """(Hadoop FileSystem, Path) for any scheme the session supports."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(path_str)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, path
-
-
-def _is_complete(spark: SparkSession, dir_str: str) -> bool:
-    fs, marker = _fs_and_path(spark, f"{dir_str}/_SUCCESS")
-    return fs.exists(marker)
-
-
 def _mtime_ms(spark: SparkSession, dir_str: str) -> int:
-    fs, marker = _fs_and_path(spark, f"{dir_str}/_SUCCESS")
+    fs, marker = fs_path(spark, f"{dir_str}/_SUCCESS")
     return fs.getFileStatus(marker).getModificationTime()
 
 
@@ -91,9 +87,10 @@ def deterministic_checkpoint(
     content-addressed).
 
     Concurrency: the frame is written to a session-private temp dir and
-    renamed into place. If another session won the race, its (complete)
-    checkpoint is used and ours is discarded — readers never see a
-    partial directory.
+    published into place. If another session won the race, its
+    (complete) checkpoint is used and ours is discarded — readers never
+    see a partial directory. An expired checkpoint is swapped in by
+    ``commit.replace``, so a reader may find it absent for a moment.
 
     ``ttl_seconds``: a checkpoint whose ``_SUCCESS`` marker is older
     than this is considered expired and rewritten (default: no expiry;
@@ -111,7 +108,7 @@ def deterministic_checkpoint(
         conf_ttl = spark.conf.get("spark.fugue_warehouses.checkpoint.ttl_seconds", "")
         ttl_seconds = float(conf_ttl) if conf_ttl else None
 
-    fresh = _is_complete(spark, path)
+    fresh = is_complete(spark, path)
     if fresh and ttl_seconds is not None:
         import time
 
@@ -119,30 +116,14 @@ def deterministic_checkpoint(
         fresh = age_s <= ttl_seconds
 
     if not fresh:
-        tmp_name = f".tmp_{fid}_{uuid.uuid4().hex[:8]}"
-        tmp = f"{root}/{tmp_name}"
+        tmp = f"{root}/.tmp_{fid}_{uuid.uuid4().hex[:8]}"
         df.write.mode("overwrite").parquet(tmp)
-        fs, dest = _fs_and_path(spark, path)
-        _, tmp_path = _fs_and_path(spark, tmp)
-        if fs.exists(dest):
-            # expired (or a racer already won): replace / defer. If we
-            # hold a stale-but-complete dir under TTL rewrite, delete
-            # then rename; if a racer just created it, keep theirs.
-            if ttl_seconds is not None and _is_complete(spark, path):
-                fs.delete(dest, True)
-                if not fs.rename(tmp_path, dest):
-                    fs.delete(tmp_path, True)
-            else:
-                fs.delete(tmp_path, True)
-        elif not fs.rename(tmp_path, dest):
+        if ttl_seconds is not None and is_complete(spark, path):
+            replace(spark, tmp, path)  # expired: swap the rewrite in
+        elif not publish(spark, tmp, path):
+            # a racer's checkpoint won the name: keep theirs
+            fs, tmp_path = fs_path(spark, tmp)
             fs.delete(tmp_path, True)
-        # Hadoop rename(src, dst) with dst an EXISTING directory moves
-        # src INSIDE it and returns true — if a racer created dest
-        # between our exists() check and the rename, our payload is now
-        # nested at dest/<tmp_name>; sweep it so the race never leaks.
-        _, nested = _fs_and_path(spark, f"{path}/{tmp_name}")
-        if fs.exists(nested):
-            fs.delete(nested, True)
     return spark.read.parquet(path)
 
 
@@ -156,24 +137,24 @@ def gc_checkpoints(
     Age-based: drop checkpoints whose marker is older than
     ``max_age_seconds``. Count-based: keep only the ``max_count`` most
     recently written. Mirrors the reference's temp-table expiration
-    policy (fugue_bigquery/client.py:186-194).
+    policy (fugue_bigquery/client.py:186-194). Temp dirs are swept once
+    older than ``commit.STAGE_TTL_S`` (24 h, as in ``versioned.vacuum``).
     """
     import time
 
     root = _checkpoint_root(spark)
-    fs, root_path = _fs_and_path(spark, root)
+    fs, root_path = fs_path(spark, root)
     if not fs.exists(root_path):
         return []
+    # a younger temp dir may be a concurrent session's write in flight
+    sweep_stages(spark, root, ".tmp_", STAGE_TTL_S)
     entries = []
     for st in fs.listStatus(root_path):
         name = st.getPath().getName()
         if not name.startswith("ckpt_"):
-            # stale temp dirs from crashed writers are garbage too
-            if name.startswith(".tmp_"):
-                fs.delete(st.getPath(), True)
             continue
         dir_str = f"{root}/{name}"
-        if not _is_complete(spark, dir_str):
+        if not is_complete(spark, dir_str):
             continue
         entries.append((name, _mtime_ms(spark, dir_str)))
 
@@ -189,7 +170,7 @@ def gc_checkpoints(
         )
         doomed |= {n for n, _ in survivors[max_count:]}
     for name in doomed:
-        fs2, p = _fs_and_path(spark, f"{root}/{name}")
+        fs2, p = fs_path(spark, f"{root}/{name}")
         fs2.delete(p, True)
     return sorted(doomed)
 

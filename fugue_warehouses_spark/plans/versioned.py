@@ -1,20 +1,19 @@
 """Versioned table store: atomic multi-version writes + time travel.
 
 The Delta/Iceberg idea reduced to its load-bearing core, on plain
-parquet + rename atomicity (the discipline plans/checkpoint.py
-established): every write lands as a brand-new immutable version
-directory ``v_00001, v_00002, ...`` under one store root; readers
-discover the latest COMPLETE version by listing, so there is no
-pointer file whose swap could be half-seen. This gives the reference's
-persist / save_table surface (SURVEY §2 A6/A17) snapshot isolation,
-reproducible pinned reads ("train on exactly v_7"), and safe
-concurrent writers — properties a 100 TB pipeline needs and an
-overwrite-in-place sink cannot give:
+parquet + rename atomicity (``plans/commit.py``): every write lands as
+a brand-new immutable version directory ``v_00001, v_00002, ...``
+under one store root; readers discover the latest COMPLETE version by
+listing, so there is no pointer file whose swap could be half-seen.
+This gives the reference's persist / save_table surface (SURVEY §2
+A6/A17) snapshot isolation, reproducible pinned reads ("train on
+exactly v_7"), and safe concurrent writers — properties a 100 TB
+pipeline needs and an overwrite-in-place sink cannot give:
 
-- **Writers** stage into ``__stage_<uuid>`` then rename to ``v_N``.
-  Hadoop rename into a non-existent destination is atomic; if a racer
-  claimed ``v_N`` first (rename "succeeds" by nesting, or fails), we
-  retry with N+1 — both writers keep their data, as distinct versions.
+- **Writers** stage into ``__stage_<uuid>`` then ``commit.publish`` it
+  as ``v_N``. Hadoop rename into a non-existent destination is atomic;
+  if a racer claimed ``v_N`` first, we retry with N+1 — both writers
+  keep their data, as distinct versions.
 - **Readers** never look at ``__stage_*`` and require the version's
   ``_SUCCESS`` marker, so a crashed writer leaves garbage, never a
   readable half-version. ``vacuum`` sweeps stage leftovers and old
@@ -30,31 +29,27 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from fugue_warehouses_spark.plans.commit import (
+    STAGE_TTL_S,
+    fs_path,
+    is_complete,
+    publish,
+    sweep_stages,
+)
+
 _V_RE = re.compile(r"^v_(\d{5,})$")
-
-
-def _fs_and_path(spark: SparkSession, path_str: str):
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(path_str)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, path
-
-
-def _is_complete(spark: SparkSession, dir_str: str) -> bool:
-    fs, marker = _fs_and_path(spark, f"{dir_str}/_SUCCESS")
-    return fs.exists(marker)
 
 
 def list_versions(spark: SparkSession, store: str) -> list[int]:
     """Complete (readable) versions, ascending. Empty if the store
     doesn't exist yet."""
-    fs, root = _fs_and_path(spark, store)
+    fs, root = fs_path(spark, store)
     if not fs.exists(root):
         return []
     out = []
     for st in fs.listStatus(root):
         m = _V_RE.match(st.getPath().getName())
-        if m and _is_complete(spark, f"{store}/{st.getPath().getName()}"):
+        if m and is_complete(spark, f"{store}/{st.getPath().getName()}"):
             out.append(int(m.group(1)))
     return sorted(out)
 
@@ -71,37 +66,17 @@ def write_version(
     version number. Safe under concurrent writers (each write becomes
     its own version; nobody's data is lost or half-visible)."""
     spark = spark or df.sparkSession
-    stage_name = f"__stage_{uuid.uuid4().hex[:12]}"
-    stage = f"{store}/{stage_name}"
+    stage = f"{store}/__stage_{uuid.uuid4().hex[:12]}"
     df.write.mode("overwrite").parquet(stage)
-    fs, _ = _fs_and_path(spark, store)
-    _, stage_path = _fs_and_path(spark, stage)
+    return _publish_next(spark, store, stage)
+
+
+def _publish_next(spark: SparkSession, store: str, stage: str) -> int:
+    """Commit ``stage`` as the lowest free version above the latest."""
     n = (latest_version(spark, store) or 0) + 1
-    while True:
-        if not fs.exists(stage_path):
-            # a concurrent vacuum() swept our stage (it was younger than
-            # the TTL only if the caller forced stage_ttl_s=0) — the data
-            # is gone, so fail loudly instead of spinning on rename
-            raise IOError(
-                f"staged write {stage_path} disappeared before commit "
-                f"(concurrent vacuum with stage_ttl_s too low?)"
-            )
-        dest_str = f"{store}/v_{n:05d}"
-        _, dest = _fs_and_path(spark, dest_str)
-        if not fs.exists(dest) and fs.rename(stage_path, dest):
-            # rename(src, EXISTING dir) "succeeds" by nesting src
-            # inside dest — detect a racer and fall through to retry
-            _, nested = _fs_and_path(spark, f"{dest_str}/{stage_name}")
-            if not fs.exists(nested):
-                return n
-            # racer owns v_n and our payload is nested inside it:
-            # pull it back out to a fresh stage and try the next slot
-            restaged = f"{store}/__stage_{uuid.uuid4().hex[:12]}"
-            _, restaged_path = _fs_and_path(spark, restaged)
-            fs.rename(nested, restaged_path)
-            stage_path = restaged_path
-            stage_name = restaged.rsplit("/", 1)[1]
+    while not publish(spark, stage, f"{store}/v_{n:05d}"):
         n += 1
+    return n
 
 
 def read_version(
@@ -114,7 +89,7 @@ def read_version(
         if version is None:
             raise FileNotFoundError(f"no complete versions under {store}")
     dir_str = f"{store}/v_{version:05d}"
-    if not _is_complete(spark, dir_str):
+    if not is_complete(spark, dir_str):
         raise FileNotFoundError(
             f"version {version} missing or incomplete under {store}"
         )
@@ -146,7 +121,7 @@ def read_all_versions(spark: SparkSession, store: str) -> DataFrame:
 def _compacts_upto(spark: SparkSession, store: str, version: int) -> int | None:
     """Max version subsumed by ``version``'s compaction, or None if the
     version is a plain delta (no ``_COMPACTS`` marker)."""
-    fs, marker = _fs_and_path(spark, f"{store}/v_{version:05d}/_COMPACTS")
+    fs, marker = fs_path(spark, f"{store}/v_{version:05d}/_COMPACTS")
     if not fs.exists(marker):
         return None
     stream = fs.open(marker)
@@ -188,7 +163,7 @@ def compact_versions(
     spark: SparkSession,
     store: str,
     sweep: bool = True,
-    stage_ttl_s: float = 86400.0,
+    stage_ttl_s: float = STAGE_TTL_S,
 ) -> int | None:
     """Fold every live version of a DELTA-LOG store into ONE new
     version, so per-probe listing/scan cost returns to a single
@@ -213,9 +188,7 @@ def compact_versions(
     orphaned by crashed writers or crashed compactions on delta-log
     stores — without it they would leak forever.
     """
-    import time
-
-    fs, _ = _fs_and_path(spark, store)
+    fs, _ = fs_path(spark, store)
     live = _live_versions(spark, store)
     if sweep:
         # sweep subsumed leftovers from a compaction that crashed
@@ -223,50 +196,27 @@ def compact_versions(
         # below would keep the dead directories (and their listing
         # cost) forever
         for v in set(list_versions(spark, store)) - set(live):
-            _, p = _fs_and_path(spark, f"{store}/v_{v:05d}")
+            _, p = fs_path(spark, f"{store}/v_{v:05d}")
             fs.delete(p, True)
-        _, root = _fs_and_path(spark, store)
-        if fs.exists(root):
-            now_ms = time.time() * 1000.0
-            for st in fs.listStatus(root):
-                name = st.getPath().getName()
-                if name.startswith("__stage_") and (
-                    now_ms - st.getModificationTime() >= stage_ttl_s * 1000.0
-                ):
-                    fs.delete(st.getPath(), True)
+        sweep_stages(spark, store, "__stage_", stage_ttl_s)
     if len(live) <= 1:
         return None
     upto = max(live)
     merged = spark.read.parquet(*[f"{store}/v_{v:05d}" for v in live])
-    stage_name = f"__stage_{uuid.uuid4().hex[:12]}"
-    stage = f"{store}/{stage_name}"
+    stage = f"{store}/__stage_{uuid.uuid4().hex[:12]}"
     merged.write.mode("overwrite").parquet(stage)
     # marker joins the staged payload BEFORE the commit rename, so the
     # marker and the data become visible in the same atomic step
-    _, marker = _fs_and_path(spark, f"{stage}/_COMPACTS")
+    _, marker = fs_path(spark, f"{stage}/_COMPACTS")
     out = fs.create(marker, True)
     try:
         out.write(bytearray(str(upto).encode("utf-8")))
     finally:
         out.close()
-    _, stage_path = _fs_and_path(spark, stage)
-    n = (latest_version(spark, store) or 0) + 1
-    while True:
-        dest_str = f"{store}/v_{n:05d}"
-        _, dest = _fs_and_path(spark, dest_str)
-        if not fs.exists(dest) and fs.rename(stage_path, dest):
-            _, nested = _fs_and_path(spark, f"{dest_str}/{stage_name}")
-            if not fs.exists(nested):
-                break
-            restaged = f"{store}/__stage_{uuid.uuid4().hex[:12]}"
-            _, restaged_path = _fs_and_path(spark, restaged)
-            fs.rename(nested, restaged_path)
-            stage_path = restaged_path
-            stage_name = restaged.rsplit("/", 1)[1]
-        n += 1
+    n = _publish_next(spark, store, stage)
     if sweep:
         for v in live:
-            _, p = _fs_and_path(spark, f"{store}/v_{v:05d}")
+            _, p = fs_path(spark, f"{store}/v_{v:05d}")
             fs.delete(p, True)
     return n
 
@@ -275,7 +225,7 @@ def vacuum(
     spark: SparkSession,
     store: str,
     keep_last: int = 2,
-    stage_ttl_s: float = 86400.0,
+    stage_ttl_s: float = STAGE_TTL_S,
 ) -> list[int]:
     """Drop all but the newest ``keep_last`` versions and sweep stage
     leftovers from crashed writers; returns removed version numbers.
@@ -288,10 +238,8 @@ def vacuum(
     never destroyed — the same leftover-vs-in-flight discipline as
     Delta's ``VACUUM ... RETAIN``. Pass ``stage_ttl_s=0`` to force-
     sweep everything (only safe when no writer can be in flight)."""
-    import time
-
     keep_last = max(1, keep_last)
-    fs, root = _fs_and_path(spark, store)
+    fs, root = fs_path(spark, store)
     if not fs.exists(root):
         return []
     removed = []
@@ -306,16 +254,10 @@ def vacuum(
             "drop folded data — use compact_versions() for cleanup"
         )
     for v in vs[:-keep_last] if len(vs) > keep_last else []:
-        _, p = _fs_and_path(spark, f"{store}/v_{v:05d}")
+        _, p = fs_path(spark, f"{store}/v_{v:05d}")
         fs.delete(p, True)
         removed.append(v)
-    now_ms = time.time() * 1000.0
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if name.startswith("__stage_") and (
-            now_ms - st.getModificationTime() >= stage_ttl_s * 1000.0
-        ):
-            fs.delete(st.getPath(), True)
+    sweep_stages(spark, store, "__stage_", stage_ttl_s)
     return removed
 
 

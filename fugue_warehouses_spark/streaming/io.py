@@ -15,9 +15,10 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from fugue_warehouses_spark.plans import commit as C
 
 # Filesystems whose "rename" is a non-atomic copy+delete: the swap in
-# compact_survivors is NOT crash-safe on these (round-10 ADVICE). The
+# compact_survivors is NOT crash-safe on these. The
 # list covers the Hadoop connectors for the major object stores; a
 # scheme not listed here is trusted to rename atomically (HDFS, local,
 # viewfs, alluxio, ...).
@@ -41,7 +42,7 @@ AT_LEAST_ONCE_NOTE = (
 def write_at_least_once_marker(spark: SparkSession, dir_path: str) -> None:
     """Drop an ``_AT_LEAST_ONCE_README`` file next to a survivor log so
     consumers who read the raw path learn its delivery contract from
-    the directory itself (round-9 ADVICE fix). Underscore-prefixed
+    the directory itself. Underscore-prefixed
     files are hidden to Spark/Hadoop parquet readers, so the marker
     never pollutes a scan. Idempotent; best-effort (a read-only
     filesystem must not fail the ingest over documentation)."""
@@ -63,30 +64,30 @@ def write_at_least_once_marker(spark: SparkSession, dir_path: str) -> None:
 def compact_survivors(
     spark: SparkSession, path: str, id_col: str = "doc_id"
 ) -> DataFrame:
-    """Exactly-once materialization of an at-least-once survivor log
-    (round 10, VERDICT r9 #7): rewrite ``path`` with one row per
-    ``id_col`` and return the compacted frame.
+    """Exactly-once materialization of an at-least-once survivor log:
+    rewrite ``path`` with one row per ``id_col`` and return the
+    compacted frame.
 
     The ingest functions (:func:`streaming.dedup.run_near_dedup_ingest`,
     :func:`streaming.embedding.run_embedding_dedup_ingest`) append
     survivors with at-least-once delivery — a crash replay can append
     the same rows twice (their RETURNED frames are deduplicated; the
-    raw path is not). External consumers of ``survivors_path``
-    previously had only a docstring warning; this helper is the
-    supported rewrite. Duplicate rows from replay are byte-identical,
-    so keeping an arbitrary row per id is exact.
+    raw path is not); this helper is the supported rewrite for
+    external consumers of ``survivors_path``. Duplicate rows from
+    replay are byte-identical, so keeping an arbitrary row per id is
+    exact.
 
-    Swap protocol (three renames, never in-place): the compacted data
-    lands at ``<path>__compact_tmp``; then ``path`` ->
-    ``<path>__compact_old``, tmp -> ``path``, old deleted. A crash
-    between the renames leaves ``path`` absent and the old log intact
-    at ``__compact_old`` — rename it back and rerun; no state is ever
-    only in memory. The ``_AT_LEAST_ONCE_README`` marker is not
-    carried into the rewrite (the compacted directory IS exactly-once
-    — a LATER ingest append to the same path re-creates the marker
-    and the at-least-once regime with it).
+    Swap protocol (``commit.replace``, never in-place): the compacted
+    data lands at ``<path>__compact_tmp``; then ``path`` ->
+    ``<path>__compact_old``, tmp -> ``path``, old deleted, each rename
+    checked. A crash between the renames leaves ``path`` absent and the
+    old log intact at ``__compact_old`` — rename it back and rerun; no
+    state is ever only in memory. The ``_AT_LEAST_ONCE_README`` marker
+    is not carried into the rewrite (the compacted directory IS
+    exactly-once — a LATER ingest append to the same path re-creates
+    the marker and the at-least-once regime with it).
 
-    FILESYSTEM REQUIREMENT (round-10 ADVICE): the crash-safety story
+    FILESYSTEM REQUIREMENT: the crash-safety story
     above depends on directory rename being ATOMIC — true on local
     filesystems, HDFS, and viewfs. Object stores (s3a, gs, abfs, ...)
     implement "rename" as a non-atomic copy+delete, so a crash
@@ -108,11 +109,7 @@ def compact_survivors(
     in a maintenance window, never on the ingest path.
     """
     tmp = path.rstrip("/") + "__compact_tmp"
-    old = path.rstrip("/") + "__compact_old"
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    hp = jvm.org.apache.hadoop.fs.Path
-    scheme = hp(path).toUri().getScheme()
+    scheme = spark._jvm.org.apache.hadoop.fs.Path(path).toUri().getScheme()
     if scheme and scheme.lower() in _NON_ATOMIC_RENAME_SCHEMES:
         raise ValueError(
             f"compact_survivors requires atomic directory rename; "
@@ -121,35 +118,12 @@ def compact_survivors(
             "log partially populated). Compact via an atomic-rename "
             "filesystem (HDFS/local) or a transactional table format."
         )
-    fs = hp(path).getFileSystem(conf)
-    # crash-debris check FIRST (round-10 review): when a prior
-    # compaction died between its renames, `path` may be ABSENT — the
-    # read below would then raise a generic path-not-found instead of
-    # these recovery instructions — and when `path` is present the
-    # check must come before paying the corpus-sized dedup shuffle.
-    if fs.exists(hp(old)):
-        raise FileExistsError(
-            f"{old} exists — a previous compaction crashed mid-swap; "
-            f"restore it to {path} (or delete it if {path} is complete) "
-            "before compacting again"
-        )
+    # debris check before the read: after a crashed swap `path` may be
+    # absent, and the check must precede the corpus-sized shuffle
+    C._refuse_swap_debris(spark, path)
     df = spark.read.parquet(path).dropDuplicates([id_col])
     df.write.mode("overwrite").parquet(tmp)
-    # job-commit marker before the point of no return: a tmp directory
-    # without _SUCCESS is a crashed/partial write (or debris a crashed
-    # earlier compaction left) and must never be swapped into place
-    if not fs.exists(hp(os.path.join(tmp, "_SUCCESS"))):
-        raise OSError(
-            f"{tmp} lacks a _SUCCESS marker after the rewrite — "
-            "partial write; original log untouched"
-        )
-    if not fs.rename(hp(path), hp(old)):
-        raise OSError(f"rename {path} -> {old} failed")
-    if not fs.rename(hp(tmp), hp(path)):
-        # put the original back; the tmp rewrite is disposable
-        fs.rename(hp(old), hp(path))
-        raise OSError(f"rename {tmp} -> {path} failed; original restored")
-    fs.delete(hp(old), True)
+    C.replace(spark, tmp, path)
     return spark.read.parquet(path)
 
 
@@ -214,42 +188,43 @@ def run_merge_sink(
 ) -> DataFrame:
     """Continuously upsert a stream into a parquet table: each
     micro-batch MERGEs (engine.merge_into) into the current target and
-    atomically swaps the result in — the streaming CDC-apply pattern
-    (warehouse MERGE fed by a change stream).
+    swaps the result in — the streaming CDC-apply pattern (warehouse
+    MERGE fed by a change stream).
 
-    Parquet has no transactional row-level merge, so the swap is a
-    rewrite (fine for dimension-sized targets; a table format with
-    upsert support replaces the swap at larger scale — the MERGE plan
-    itself is unchanged). The checkpoint gives at-least-once batch
-    delivery, and merging is idempotent per key, so replays converge.
-    Returns the final merged table as a batch frame.
+    The first batch is published into the missing path, later ones are
+    swapped in by ``plans/commit.replace``: a reader may find the path
+    absent between its two renames, never partly written, and a failed
+    swap restores the previous table. Parquet has no transactional
+    row-level merge, so the swap is a rewrite (fine for dimension-sized
+    targets; a table format with upsert support replaces the swap at
+    larger scale — the MERGE plan itself is unchanged). The checkpoint
+    gives at-least-once batch delivery, and merging is idempotent per
+    key, so replays converge. Returns the final merged table as a batch
+    frame.
     """
-    import uuid as _uuid
-
     from fugue_warehouses_spark.engine import SparkWarehouseEngine
 
     spark = stream_df.sparkSession
     eng = SparkWarehouseEngine(spark)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        dest = jvm.org.apache.hadoop.fs.Path(target_path)
-        fs = dest.getFileSystem(conf)
+        fs, dest = C.fs_path(spark, target_path)
         # dedup within the batch (last write wins is arbitrary here;
         # sources with a version column should pre-aggregate)
-        batch_df = batch_df.dropDuplicates(on)
-        if not fs.exists(dest):
-            batch_df.write.mode("overwrite").parquet(target_path)
-            return
-        target = spark.read.parquet(target_path)
-        merged = eng.merge_into(target, batch_df, on=on).native
-        tmp = f"{target_path}__m{_uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp)
-        trash = jvm.org.apache.hadoop.fs.Path(f"{tmp}.old")
-        fs.rename(dest, trash)
-        fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), dest)
-        fs.delete(trash, True)
+        out = batch_df.dropDuplicates(on)
+        exists = fs.exists(dest)
+        if exists:
+            target = spark.read.parquet(target_path)
+            out = eng.merge_into(target, out, on=on).native
+        stage = f"{target_path}__m{uuid.uuid4().hex[:8]}"
+        out.write.mode("overwrite").parquet(stage)
+        if exists:
+            C.replace(spark, stage, target_path)
+        elif not C.publish(spark, stage, target_path):
+            raise FileExistsError(
+                f"{target_path} was created by another writer during "
+                f"batch {batch_id}; the batch is staged at {stage}"
+            )
 
     q = (
         stream_df.writeStream.foreachBatch(_apply)

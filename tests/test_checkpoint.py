@@ -93,12 +93,20 @@ def test_gc_by_age_and_count(spark, ckpt_root):
 
 
 def test_gc_sweeps_stale_tmp_dirs(spark, ckpt_root):
+    import os
+
     deterministic_checkpoint(spark.range(2))
     stale = ckpt_root / ".tmp_dead_beef"
     stale.mkdir()
     (stale / "part-junk").write_text("x")
+    old = time.time() - 2 * 86400
+    os.utime(stale, (old, old))
+    # a concurrent session's checkpoint still being written
+    fresh = ckpt_root / ".tmp_in_flight"
+    fresh.mkdir()
     gc_checkpoints(spark)
     assert not stale.exists()
+    assert fresh.exists()
 
 
 def test_no_partial_dir_visible_after_write(spark, ckpt_root):

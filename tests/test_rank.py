@@ -30,6 +30,24 @@ def test_global_rank_matches_window_row_number(spark):
     assert sorted(got.values()) == list(range(1, 5001))
 
 
+@pytest.mark.parametrize("num_partitions", [1, 3, 8])
+def test_global_rank_descending_matches_window_row_number(spark, num_partitions):
+    df = (
+        spark.range(600)
+        .selectExpr("id", "CAST(hash(id) % 37 AS DOUBLE) AS v")
+        .repartition(5)
+    )
+    ranked, n = add_global_rank(
+        df, [F.desc("v"), "id"], rank_col="r", num_partitions=num_partitions
+    )
+    assert n == 600
+    w = Window.orderBy(F.col("v").desc(), F.col("id").asc())
+    expect = df.withColumn("r", F.row_number().over(w).cast("long"))
+    got = {r["id"]: r["r"] for r in ranked.collect()}
+    want = {r["id"]: r["r"] for r in expect.collect()}
+    assert got == want
+
+
 @pytest.mark.parametrize("n,k", [(0, 10), (7, 10), (10, 10), (15000, 10), (101, 4)])
 def test_ntile_from_rank_matches_sql_ntile(spark, n, k):
     if n == 0:

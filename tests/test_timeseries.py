@@ -180,8 +180,8 @@ def test_refresh_rollup_ignores_incomplete_version(spark, tmp_path):
     import pathlib
     import shutil
 
-    v1 = pathlib.Path(store) / "v=1"
-    bogus = pathlib.Path(store) / "v=2"
+    v1 = pathlib.Path(store) / "v_00001"
+    bogus = pathlib.Path(store) / "v_00002"
     shutil.copytree(v1, bogus)
     (bogus / "_SUCCESS").unlink()
     empty = spark.createDataFrame([], "ts timestamp_ntz, v double")
