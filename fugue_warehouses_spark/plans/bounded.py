@@ -1,6 +1,5 @@
-"""Bounded driver fast paths — the shared contract behind the
-pattern that rounds 6-7 grew in three places with three bound styles
-(extracted round 8, VERDICT r7 #8):
+"""Bounded driver fast paths — one shared contract for a pattern
+that had grown in three places with three bound styles:
 
     a distributed operator may finish a SMALL instance on the driver
     (one Arrow/collect transfer + numpy) when, and only when,
@@ -12,9 +11,9 @@ pattern that rounds 6-7 grew in three places with three bound styles
         test_similarity.py local-CC vs distributed dedup_near,
         plus the 320k probes that exceed every budget).
 
-Why it exists: at bench scale the driver path removes whole seconds of
+Why it exists: at fixture scale the driver path removes whole seconds of
 per-job scheduling floor (PageRank 8.3→2.55 s, within-batch CC
-5.3→1.7 s, round 7), while the explicit budget is what keeps the same
+5.3→1.7 s), while the explicit budget is what keeps the same
 code 100 TB-safe — past the bound the operator plans exactly as if the
 fast path didn't exist. The registered sites and their budgets:
 

@@ -196,8 +196,8 @@ def released_after(spark: SparkSession, blocking: bool = True):
     ContextCleaner happens to notice the dropped Python references.
     At tight heaps that accumulation is fatal: SCALE_NOTES records the
     second back-to-back 320k minhash run dying at 8g without an
-    explicit release. Usage (bench.py / scale_probe.py iteration
-    loops)::
+    explicit release. Usage (``perfbench`` / ``scale_probe.py``
+    iteration loops)::
 
         with released_after(spark):
             op(df).count()       # consume the result IN the scope

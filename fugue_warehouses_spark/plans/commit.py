@@ -96,6 +96,12 @@ def replace(spark: SparkSession, stage: str, dest: str) -> None:
     is lost: a crash in that window leaves the old data at
     ``<dest>__compact_old`` and the new data at ``stage``.
 
+    A failed swap that leaves ``dest`` holding the old data (either
+    rename failed, and the restore succeeded) deletes the stage before
+    raising ``OSError``, so retries do not pile up full copies. The
+    stage is kept whenever it may hold the only copy of something: when
+    the restore fails, and on the refusals below.
+
     Refuses with ``FileExistsError`` ("crashed mid-swap") while
     ``<dest>__compact_old`` exists, and with ``OSError`` when the stage
     lacks ``_SUCCESS``. One writer at a time per ``dest``."""
@@ -105,6 +111,8 @@ def replace(spark: SparkSession, stage: str, dest: str) -> None:
     _, src = fs_path(spark, stage)
     _, old_p = fs_path(spark, old)
     if not _rename(fs, dst, old_p):
+        if fs.exists(dst):
+            fs.delete(src, True)
         raise OSError(f"rename {dest} -> {old} failed; {dest} untouched")
     if not _rename(fs, src, dst):
         if not _rename(fs, old_p, dst):
@@ -112,6 +120,7 @@ def replace(spark: SparkSession, stage: str, dest: str) -> None:
                 f"rename {stage} -> {dest} failed, and restoring {old} -> "
                 f"{dest} failed too; the old data is at {old}"
             )
+        fs.delete(src, True)
         raise OSError(f"rename {stage} -> {dest} failed; original restored")
     fs.delete(old_p, True)
 

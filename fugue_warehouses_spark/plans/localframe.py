@@ -1,11 +1,11 @@
-"""One-slice driver-local DataFrames (round 11, guide §1.2/§2.4).
+"""One-slice driver-local DataFrames.
 
 ``spark.createDataFrame(list)`` parallelizes the rows into
 ``defaultParallelism`` slices — so every read of a tiny offsets /
 centroid / probe-term frame runs 32 near-empty tasks, and every
 BROADCAST build over one pays 32 Python-runner rounds (the slices are
 pickled Python rows; each partition evaluation is a separate runner
-exchange). Measured this round on the global-rank offsets frame:
+exchange). Measured on the global-rank offsets frame:
 32-slice 1.24 s vs one-slice 0.93 s for the equidepth facet — and a
 ``.coalesce(1)`` "fix" is an anti-fix (5.5 s: ONE task then pays the
 32 runner rounds sequentially).

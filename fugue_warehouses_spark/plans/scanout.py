@@ -1,12 +1,12 @@
-"""Scale-adaptive fan-out after an unsplittable scan (round 11).
+"""Scale-adaptive fan-out after an unsplittable scan.
 
-Guide §2.5, input skew: "one huge unsplittable file (gzip) ... fix at
+The input-skew rule: "one huge unsplittable file (gzip) ... fix at
 the source if you can; otherwise repartition immediately after the
 read." A parquet file is splittable only at ROW-GROUP boundaries, so a
 table written as one row group scans as ONE task no matter what
 ``spark.sql.files.maxPartitionBytes`` / ``minPartitionNum`` ask for —
 and every expensive per-row expression or Python table function placed
-in that scan stage runs serially on one core. The bench fixtures are
+in that scan stage runs serially on one core. The fixture tables are
 exactly this shape (every sf0.1 table is a single row group), and a
 real lake has the same problem with single-row-group exports and
 gzip'd text.
@@ -20,18 +20,18 @@ sortBeforeRepartition``, on by default so task retries are
 deterministic), which for document-sized rows costs more than the
 shuffle itself.
 
-Round 12 (ADVICE r11): the parallelism probe is CACHED per input file
-set — ``df.rdd.getNumPartitions()`` builds a full QueryExecution plus
+The parallelism probe is CACHED per input file set —
+``df.rdd.getNumPartitions()`` builds a full QueryExecution plus
 the DataFrame→RDD conversion that is then discarded, so repeated
-calls over the same table (every bench rep, every facet sharing a
+calls over the same table (every benchmark pass, every facet sharing a
 fixture) re-paid analysis for a number that only depends on the files
 and the split size. Scan split counts are a function of the file
 set + ``maxPartitionBytes``/``openCostInBytes`` (filters/projections
 don't change them; partition pruning changes ``inputFiles`` and hence
-the cache key). And the dead zone is gone: any scan planned BELOW the
-core count is repartitioned (previously only below half) — the added
-exchange is cheap relative to an under-parallel per-row Python or
-regex stage, which is the only reason callers invoke this.
+the cache key). Any scan planned BELOW the core count is
+repartitioned — the added exchange is cheap relative to an
+under-parallel per-row Python or regex stage, which is the only reason
+callers invoke this.
 """
 
 from __future__ import annotations

@@ -916,7 +916,7 @@ def doc_corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_exact_dup_docs (docs whose normalized fingerprint is shared
     CORPUS-WIDE — cross-source duplication counts against both
     sources), distinct_fps, and the token-length percentile sketch
-    p50/p90/p99_tokens (round 11 — the length-distribution line every
+    p50/p90/p99_tokens (the length-distribution line every
     public corpus datasheet carries; exact interpolated percentiles,
     matching DuckDB's quantile_cont).
 
@@ -1046,7 +1046,7 @@ def doc_corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def doc_datacard_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl-over-crawl DATACARD DIFF (round 11): the operational
+    """Crawl-over-crawl DATACARD DIFF: the operational
     sibling of doc_corpus_datacard — before ingesting a new crawl
     snapshot, report per source what it actually adds: doc/token
     mass vs the previous corpus, exact-dup exposure against the OLD
@@ -1148,7 +1148,7 @@ from fugue_warehouses_spark.extensions.bpe import bpe_train_sql as _bpe_train_sq
 
 @_q("doc_bpe_train", _bpe_train_sql(8))
 def doc_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE tokenizer TRAINING (round 11): learn the first
+    """Distributed BPE tokenizer TRAINING: learn the first
     8 merges from the corpus (extensions/bpe.py — wordcount once,
     then per step one vocab-sized pair-count shuffle + scalar argmax
     + the double-space literal-replace merge). Deterministic: pair
@@ -1174,10 +1174,9 @@ def doc_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-wide (bpe.bpe_encode — a shuffle-free codegen'd replace
     chain riding the scan), reporting per-source REAL BPE token mass
     and tokens-per-word — the ground truth the doc_bpe_token_budget
-    heuristic estimates. Training runs INLINE every call (round 12:
-    the round-11 per-process merge-table memo was removed — VERDICT
-    r11 #1 judged it result-caching keyed on the test data, not an
-    optimization), which is affordable honestly now that bpe_train
+    heuristic estimates. Training runs INLINE every call (there is
+    no per-process merge-table memo: one keyed on the input data is
+    result-caching, not an optimization), which is affordable honestly now that bpe_train
     takes the bounded driver-local merge loop at small vocabs; the
     oracle retrains inline with the identical replace algebra."""
     from fugue_warehouses_spark.extensions.bpe import bpe_encode, bpe_train
@@ -1223,9 +1222,8 @@ def doc_bpe_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-doc quality composite over columns (text, toks, ntok) — THE
 # single SQL source of truth for TX.quality_score's oracle twin.
 # Three facets consume it (quality-by-source, token-budget selection,
-# the training pipeline); round-9 review deduplicated the hand copies
-# that had accumulated — a missed edit in one copy would silently
-# diverge that facet's oracle from the Spark twin.
+# the training pipeline); one copy, because a missed edit in a hand
+# copy would silently diverge that facet's oracle from the Spark twin.
 _Q_EXPR = r"""((CASE WHEN ntok >= 20 THEN 1.0 ELSE ntok / 20.0 END)
               + (CASE WHEN coalesce(list_sum(list_transform(toks,
                      t -> length(t))), 0) / greatest(ntok, 1)
@@ -1293,13 +1291,13 @@ def doc_quality_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fugue_warehouses_spark.plans.scanout import fan_out_scan
 
     docs = _t(spark, sf_dir, "documents")
-    # lazy localCheckpoint (round 11, guide §1.2 "fewer passes"): the
+    # lazy localCheckpoint ("fewer passes"): the
     # narrow (id, source, q, ntok) projection is consumed THREE times
     # — the range-partitioner's sampling pass, the cumsum shuffle, and
     # the total-tokens aggregate — and q/ntok are the expensive
     # regex-heavy text expressions; materialize the 4-column frame
     # once (rows are ~40 B regardless of document length). Fan out the
-    # scan first (round 12, guide §2.5): the single-row-group fixture
+    # scan first: the single-row-group fixture
     # ran the whole regex projection as ONE task — profiled 30.5 s of
     # summed task time serialized on one core.
     per = fan_out_scan(docs, "doc_id").select(
@@ -1359,7 +1357,7 @@ def doc_curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets, and the final schedule position) are
     operators/rank.add_global_rank range-shuffle ranks — never a
     partition-less window (NTILE/ROW_NUMBER over a global ORDER BY is
-    a one-task sort at 100 TB), and (round 12) never a cumsum-of-ones
+    a one-task sort at 100 TB), and never a cumsum-of-ones
     either: the rank decodes from the monotonic id, so each pass is
     ONE exchange, not exchange + pid-window exchange. Buckets are rank quartiles computed
     as 1 + (qpos-1)*4 div N — exact integer arithmetic both engines,
@@ -1371,17 +1369,16 @@ def doc_curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fugue_warehouses_spark.plans.scanout import fan_out_scan
 
     docs = _t(spark, sf_dir, "documents")
-    # lazy localCheckpoint (round 11, guide §1.2): the q projection is
-    # consumed by the range sampler and the rank shuffle — without it
-    # the regex-heavy quality_score re-evaluates each time. Fanned out
-    # (round 12, guide §2.5): single-row-group scan serialized the
-    # quality regex on one core.
+    # lazy localCheckpoint: the q projection is consumed by the range
+    # sampler and the rank shuffle — without it the regex-heavy
+    # quality_score re-evaluates each time. Fanned out: a
+    # single-row-group scan serialized the quality regex on one core.
     per = fan_out_scan(docs, "doc_id").select(
         "doc_id", TX.quality_score("text").alias("q"),
     ).localCheckpoint(eager=False)
-    # both global positions are RANKS (cumsums of ones) — round 12:
+    # both global positions are RANKS (cumsums of ones):
     # add_global_rank decodes the rank from the monotonic id with no
-    # pid-window (one exchange per pass instead of two; guide §2.4),
+    # pid-window (one exchange per pass instead of two),
     # and its offsets collect yields n, so the separate count() job
     # the quartile arithmetic used to pay is gone too
     ranked, n = add_global_rank(
@@ -1986,7 +1983,7 @@ def embedding_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def embedding_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SEMANTIC decontamination (round 11): flag corpus embeddings
+    """SEMANTIC decontamination: flag corpus embeddings
     within cosine >= 0.35 of any benchmark vector (benchmark =
     vec_id < 25 here; a real eval suite's embeddings in production) —
     the embedding-space leg of the decontamination family, catching
@@ -2350,17 +2347,17 @@ def _serving_handle(
     """Build-once/persist/warm-EXACT-shape contract shared by every
     process-cached serving handle (the persisted-IVF, Bloom-dedup and
     MinHash-index facets; the next persisted state gets it by
-    inheritance — VERDICT r8 #6):
+    inheritance):
 
     - ONE build per (family, sf_dir) per process; the durable source
       of truth is a versioned store — by default under a per-process
       temp root (removed at exit), or at a caller-supplied ``store``
-      path that SURVIVES the process (round 10); state served from
+      path that SURVIVES the process; state served from
       cluster memory;
     - ``build(store) -> (entry_dict, warmup_fn)`` does the
       family-specific work, using :func:`_stored_table` for each
       write-version/read-back/persist/eager-materialize table;
-    - cross-process re-open (round 10, the actual 100 TB serving
+    - cross-process re-open (the actual 100 TB serving
       story: a new serving process re-opens the store a build process
       wrote instead of re-scanning the corpus): a ``_HANDLE_COMPLETE``
       marker commits AFTER the build's last table write, and when a
@@ -2373,15 +2370,15 @@ def _serving_handle(
       files, so a caller-supplied ``store`` must be a local
       filesystem path — URI schemes are refused loudly, and a
       ``_BUILD_LOCK`` exclusive-create file serializes builders of
-      the same store (both round-10 ADVICE);
+      the same store;
     - the warmup callable returns the EXACT facet plan shape and runs
-      THREE times after the entry is cached. This encodes the round-8
+      THREE times after the entry is cached. This encodes the
       C2 lesson: a toy probe (k=1, limit(50)) compiles the codegen
       class but leaves the hot loops interpreted/C1 — a fresh JVM
       measured 1.03/1.03/0.79 s for the first three persisted-IVF
-      facet reps vs 0.65-0.70 steady state, so a best-of-3 bench
-      window sat entirely inside the C2 warming region (the r6/r7
-      "above band" readings). Warm the exact shape, three times,
+      facet reps vs 0.65-0.70 steady state, so a best-of-3 timing
+      window sat entirely inside the C2 warming region ("above band"
+      readings). Warm the exact shape, three times,
       outside any timed region.
     """
     import atexit
@@ -2403,7 +2400,7 @@ def _serving_handle(
         # non-local store URI (hdfs://, s3a://) would never SEE the
         # marker (silent full rebuild in every process, defeating the
         # re-open contract) or would fail opaquely inside open().
-        # Refuse loudly instead (round-10 ADVICE); porting the
+        # Refuse loudly instead; porting the
         # sidecars to the Hadoop FileSystem API is the upgrade path if
         # a shared-filesystem store is ever needed.
         from urllib.parse import urlparse
@@ -2423,9 +2420,9 @@ def _serving_handle(
     else:
         # exclusive-create lock: two processes building the SAME store
         # concurrently would interleave table versions — each table
-        # internally consistent but cross-table pairing unverified
-        # (round-10 ADVICE). First builder wins; the loser gets told
-        # what's happening instead of silently double-building.
+        # internally consistent but cross-table pairing unverified.
+        # First builder wins; the loser gets told what's happening
+        # instead of silently double-building.
         try:
             lock_fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
         except FileExistsError:
@@ -2679,7 +2676,7 @@ _AUDIO_SQL = """
 
 @_q("multimodal_audio_features", _AUDIO_SQL)
 def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio leg of the multimodal surface (round 11): synthesize
+    """REAL audio leg of the multimodal surface: synthesize
     deterministic PCM per document, encode it as a genuine WAV
     container (extensions.wav), then run the full real pipeline —
     RIFF chunk-walk decode, 160-sample framing, vectorized integer
@@ -2709,9 +2706,9 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         for pdf in batches:
             ids = pdf["id"].astype("int64")
-            # vectorized sample synthesis across the whole batch
-            # (round 11, guide §4.2): one flat arange/mod pass instead
-            # of per-doc numpy calls; encode_wav slices per doc
+            # vectorized sample synthesis across the whole batch:
+            # one flat arange/mod pass instead of per-doc numpy
+            # calls; encode_wav slices per doc
             idv = ids.to_numpy()
             n = 256 + idv % 256
             offs = np.concatenate(([0], np.cumsum(n)))
@@ -2773,8 +2770,8 @@ _AUDIO_SEG_SQL = """
 
 @_q("multimodal_audio_segments", _AUDIO_SEG_SQL)
 def multimodal_audio_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """VAD-style utterance extraction over REALLY-decoded audio
-    (round 11): synthesize amplitude-modulated PCM (quiet frame every
+    """VAD-style utterance extraction over REALLY-decoded audio:
+    synthesize amplitude-modulated PCM (quiet frame every
     4th), WAV-encode, then run multimodal.audio_segments with
     decode_stub=False — RIFF decode, 160-sample framing, energy
     threshold, maximal-run island extraction inside the Arrow batch.
@@ -2796,7 +2793,7 @@ def multimodal_audio_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         for pdf in batches:
             ids = pdf["id"].astype("int64")
-            # vectorized synthesis across the batch (round 11, §4.2):
+            # vectorized synthesis across the batch:
             # same closed-form stream, one flat pass
             idv = ids.to_numpy()
             n = 512 + idv % 512
@@ -4155,15 +4152,15 @@ def doc_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fugue_warehouses_spark.plans.scanout import fan_out_scan
 
     docs = _t(spark, sf_dir, "documents")
-    # fan out the scan before the quality/lang filter (round 12, guide
-    # §2.5): both predicates are heavy regex/char-class expressions,
+    # fan out the scan before the quality/lang filter: both
+    # predicates are heavy regex/char-class expressions,
     # and the single-row-group fixture evaluated them serially in a
     # one-task scan stage. No-op at real scan parallelism.
     filtered = fan_out_scan(docs, "doc_id").filter(
         (TX.quality_score("text") >= 0.75) & (TX.lang_id("text") == "en")
     )
-    # token estimate computed BEFORE the dedup window (round 11, guide
-    # §2.3 "project before the exchange" / §8 proxy pattern): the agg
+    # token estimate computed BEFORE the dedup window ("project before
+    # the exchange"): the agg
     # was the only post-window consumer of `text`, so the fingerprint
     # exchange shipped every document's bytes to carry one long. With
     # __est precomputed below the exchange, Catalyst prunes `text`
@@ -4405,9 +4402,8 @@ def doc_dsir_select_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-space joined) to the same 4096 hashed buckets alongside its
     unigrams. The oracle rebuilds the exact gram stream with a
     generate_series self-pairing, so the selected SET stays
-    engine-exact (round-10: puts the ngram_max=2 path, previously
-    unit-tested only, under the same oracle discipline as the unigram
-    facet). Plan shape is unchanged — the bigram explode roughly
+    engine-exact (this puts the ngram_max=2 path under the same
+    oracle discipline as the unigram facet). Plan shape is unchanged — the bigram explode roughly
     doubles the token stream feeding the one tagged-union wordcount;
     still no UDFs, no collects."""
     from fugue_warehouses_spark.extensions.sampling import dsir_select
@@ -4546,7 +4542,7 @@ def _bloom_handle_for(
         # Re-deriving thr from the live corpus on re-open would
         # silently desynchronize on a grown corpus — docs in
         # [thr_build, thr_new) would be treated as covered history the
-        # bitset never saw, i.e. silent under-dedup (round-10 review).
+        # bitset never saw, i.e. silent under-dedup.
         with open(_os.path.join(store_dir, "thr.json"), "w") as f:
             _json.dump({"thr": thr}, f)
         return _entry_from_store(store_dir, bloom, fps, thr)
@@ -4704,7 +4700,7 @@ def doc_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sig_estimate_sql() -> str:
-    """DuckDB twin of the SIGNATURE-ESTIMATED near-dedup (round 11):
+    """DuckDB twin of the SIGNATURE-ESTIMATED near-dedup:
     replays the ENTIRE MinHash pipeline in SQL — byte shingles as
     base-257 polynomials (grams < 257^5 < 2^49, so plain BIGINT), the
     seeded multiply-add permutation family with the 64 (a, b)
@@ -4781,7 +4777,7 @@ def doc_near_dup_signature_estimate(
 ) -> DataFrame:
     """Signature-estimated incremental near-dedup, hash-checked: the
     grams-free serving mode (extensions/dedup.py ``verify="signature"``
-    over a ``keep_grams=False`` index — SCALE_NOTES r11: 11x smaller
+    over a ``keep_grams=False`` index — SCALE_NOTES.md: 11x smaller
     store, 2-3.8x faster per-batch verify) run as a driver-visible
     facet against an EXACT DuckDB replay of the whole MinHash pipeline
     (byte shingles -> inlined seeded permutation family -> component
@@ -4791,8 +4787,7 @@ def doc_near_dup_signature_estimate(
     docs = _t(spark, sf_dir, "documents")
     hist = docs.filter(F.col("doc_id") % 5 != 4)
     new = docs.filter(F.col("doc_id") % 5 == 4)
-    # lazy localCheckpoint (round 11, guide §1.2 "don't compute things
-    # twice"): the index feeds TWO plan branches (banding + verify
+    # lazy localCheckpoint ("don't compute things twice"): the index feeds TWO plan branches (banding + verify
     # signatures) — without it each branch re-signed the whole hist
     # side; the sibling incremental facets already checkpoint here, and
     # the real workflow reads a persisted signature table instead
@@ -4861,7 +4856,7 @@ def _minhash_index_for(
 ):
     """MinHash signature index of the historical corpus (doc_id % 5
     != 4) under the :func:`_serving_handle` contract — the near-dedup
-    analog of _bloom_handle_for. The BAND table too (round 8):
+    analog of _bloom_handle_for. The BAND table too:
     re-banding the index per batch is an index-length explode per
     call — precompute it at build time like a real rolling pipeline
     stores banded postings. A caller-supplied ``store`` holding a
@@ -4923,7 +4918,7 @@ def doc_incremental_near_dedup_persisted(
     verify. History TEXT is never re-read per batch — the benched
     row measures the per-crawl marginal cost, while the inline sibling
     keeps paying the 80%-corpus index rebuild for oracle
-    self-containment (round-8 re-band, VERDICT r7 #6)."""
+    self-containment."""
     docs = _t(spark, sf_dir, "documents")
     h = _minhash_index_for(spark, sf_dir)
     new = docs.filter(F.col("doc_id") % 5 == 4)
@@ -5090,13 +5085,13 @@ def doc_token_balanced_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     from fugue_warehouses_spark.plans.scanout import fan_out_scan
 
-    # lazy localCheckpoint (round 11, guide §1.2): the regex-heavy
+    # lazy localCheckpoint: the regex-heavy
     # token_count projection feeds the cumsum pipeline's sampling
     # pass, range shuffle and total aggregate — materialize the
     # ~16 B/row (id, ntok) frame once instead of re-splitting every
     # document per pass (same fix as doc_quality_token_budget).
-    # Fanned out (round 12, guide §2.5): the single-row-group scan
-    # serialized the split on one core.
+    # Fanned out: the single-row-group scan serialized the split on
+    # one core.
     weighted = fan_out_scan(docs, "doc_id").select(
         "doc_id", TX.token_count("text").alias("__ntok")
     ).localCheckpoint(eager=False)
@@ -6426,7 +6421,7 @@ def customer_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from fugue_warehouses_spark.plans.scanout import fan_out_scan
 
-    # fan out the unsplittable scan (round 11, guide §2.5): the
+    # fan out the unsplittable scan: the
     # deletion-variant explode + hash (~25x row fan-out) ran serially
     # on the single-row-group customer file; the keyed repartition
     # moves only the narrow name rows once, is reused by both join
@@ -6874,7 +6869,7 @@ _EVAL_QUERIES = [
 
 @_q("doc_retrieval_eval", None)  # oracle attached below (needs queries)
 def doc_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Retrieval-quality eval (round 11): MRR@10 / nDCG@10 /
+    """Retrieval-quality eval: MRR@10 / nDCG@10 /
     best-doc@10 of the BM25 ranking against graded term-hit-mass
     pseudo-relevance, per probe query (extensions/retrieval.py
     retrieval_eval). The eval leg every index/scorer change needs —
@@ -6946,10 +6941,9 @@ def doc_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = RT.bm25_scores(docs, "doc_id", "text", _BM25_TERMS)
     lex_order = [F.round("score", 6).desc(), F.col("doc_id").asc()]
     # top-50 FIRST (TakeOrdered — distributed per-partition top-k +
-    # driver merge), THEN rank the 50 survivors with the window
-    # (round 11, guide §2.4): the previous shape ranked the whole
-    # matched set through a partition-less window — a one-task sort of
-    # every BM25 match. Ranks are identical because the order is total
+    # driver merge), THEN rank the 50 survivors with the window:
+    # ranking the whole matched set through a partition-less window
+    # would be a one-task sort of every BM25 match. Ranks are identical because the order is total
     # (rounded score desc, doc_id asc): the top-50 by that order get
     # row numbers 1..50 either way.
     lex = (
@@ -7297,7 +7291,7 @@ def orders_approx_distinct_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # =====================================================================
 # Table history: snapshot diff, SCD Type 2, changelog compaction,
-# time-weighted average, equi-depth histogram, matryoshka ANN (round 4)
+# time-weighted average, equi-depth histogram, matryoshka ANN
 # =====================================================================
 
 

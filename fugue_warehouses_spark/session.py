@@ -4,7 +4,7 @@ The reference delegates execution to warehouse engines and exposes a
 ``parallelism`` knob (read fan-out = 2x parallelism,
 fugue_bigquery/api.py:100-102,176-177). Here the single engine is
 Spark; this module centralizes the session config so every entry point
-(tests, bench, driver contract) gets the same tuned session.
+(tests, benchmark, driver contract) gets the same tuned session.
 
 Design-for-scale notes (local[32] test rig, 1000-executor target):
 - AQE on: runtime shuffle-partition coalescing, skew-join splitting,
@@ -53,8 +53,8 @@ def _tune_malloc() -> None:
     mmap regions run at single-digit MB/s, so every numpy temp over
     the 128 KB default threshold re-pays a fault storm on EVERY
     allocation — measured 4.5-49 s for 64-258 MB temps, dropping to
-    0.03-0.6 s once the region is reused (round 7; this is the
-    mechanism behind three rounds of 'host noise' banding). With the
+    0.03-0.6 s once the region is reused (this is the mechanism
+    behind timings once banded as 'host noise'). With the
     thresholds raised, freed large buffers stay in the process heap
     and are reused fault-free; the one-time first-touch cost lands in
     session/query warmups. Workers get the same via the
@@ -89,7 +89,7 @@ _DEFAULT_CONF: dict[str, str] = {
     # extra driver JVM flags (local mode: the one JVM). Main use:
     # pinning -Xms=-Xmx for GC-variance probes — a growing heap takes
     # full GCs at every expansion step under a localCheckpoint-heavy
-    # workload (SCALE_NOTES round 6)
+    # workload (SCALE_NOTES.md)
     "spark.driver.extraJavaOptions": os.environ.get(
         "SPARK_GRAFT_DRIVER_JAVA_OPTS", ""
     ),
@@ -113,10 +113,10 @@ _DEFAULT_CONF: dict[str, str] = {
 def pinned_heap_conf() -> dict[str, str]:
     """extra_conf that pins the driver JVM's -Xms to its -Xmx.
 
-    Round 6 measured a growing heap as THE bench/probe variance driver
+    A growing heap was measured as THE benchmark/probe variance driver
     under localCheckpoint-heavy workloads (full GC at every expansion
     step: 320k/8g spread 4.8-11x unpinned vs 1.86x pinned), so
-    ``bench.py`` and ``scale_probe.py`` pin by default. A caller-set
+    ``perfbench`` and ``scale_probe.py`` pin by default. A caller-set
     ``SPARK_GRAFT_DRIVER_JAVA_OPTS`` wins — this helper then returns
     {} and the env passthrough in ``_DEFAULT_CONF`` applies as-is.
     Cluster note: local-mode driver == the one executing JVM; on a real
@@ -127,7 +127,7 @@ def pinned_heap_conf() -> dict[str, str]:
     # -Xss16m: Catalyst analysis recurses deeply on big triangle-block
     # + iterative-CC plans; Structured Streaming's stream-execution
     # thread overflowed the default 1 MB stack running that plan shape
-    # inside foreachBatch (round-7 320k ingest probe). 16 MB per
+    # inside foreachBatch (the 320k ingest probe). 16 MB per
     # thread is noise against the pinned heap.
     return {"spark.driver.extraJavaOptions": f"-Xms{mem} -Xss16m"}
 

@@ -2,9 +2,9 @@
 """Scale probe: measure how the scale-sensitive operators behave as the
 corpus grows, on synthetic data larger than the driver fixtures.
 
-The per-round bench (bench.py) runs at sf0.1 where most queries are
-scheduling-floor-bound; this probe answers the question the bench
-can't: *does wall time grow like the design says it should* (≈linear
+The benchmark (``perfbench/``, declared in ``BENCHMARK.json``) runs on
+the sf0.01 fixture where most queries are scheduling-floor-bound; this
+probe answers the question that benchmark can't: *does wall time grow like the design says it should* (≈linear
 for the banded/bucketed/blocked paths) when the data grows 4x and 16x?
 Results + commentary live in SCALE_NOTES.md.
 
@@ -200,7 +200,7 @@ def probe(spark, sizes, ops=None, repeat=1):
                 file=sys.stderr, flush=True,
             )
         # the whole facet under the same window, warm best-of-3, as the
-        # cross-check that the phase sum reproduces the bench reading
+        # cross-check that the phase sum reproduces the whole-facet reading
         from fugue_warehouses_spark.queries import QUERIES
 
         QUERIES["part_pagerank"](spark, sf_dir).count()  # warm

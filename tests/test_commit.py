@@ -7,6 +7,7 @@ or raising, as a crash between two renames would."""
 
 from __future__ import annotations
 
+import ast
 import os
 import pathlib
 import re
@@ -22,16 +23,17 @@ from fugue_warehouses_spark.plans import versioned as V
 
 @pytest.fixture()
 def fail_rename(monkeypatch):
-    """``arm(n, crash=None)``: the n-th rename from now returns False,
-    or raises ``crash``; the others run. Returns the list of calls."""
+    """``arm(*ns, crash=None)``: the ns-th renames from now return
+    False, or raise ``crash``; the others run. Returns the list of
+    calls."""
 
-    def arm(n, crash=None):
+    def arm(*ns, crash=None):
         real = C._rename
         calls = []
 
         def flaky(fs, src, dst):
             calls.append((src.toString(), dst.toString()))
-            if len(calls) == n:
+            if len(calls) in ns:
                 if crash is not None:
                     raise crash
                 return False
@@ -111,6 +113,35 @@ def test_replace_restores_dest_when_the_second_rename_fails(
         C.replace(spark, stage, dest)
     assert _ids(spark, dest) == [100, 101]
     assert not os.path.exists(dest + "__compact_old")
+    assert not os.path.exists(stage)
+
+
+def test_replace_drops_its_stage_when_the_first_rename_fails(
+    spark, tmp_path, fail_rename
+):
+    stage, dest = str(tmp_path / "stage"), str(tmp_path / "dest")
+    _write(spark, dest, 2, start=100)
+    _write(spark, stage, 4)
+    fail_rename(1)
+    with pytest.raises(OSError, match="untouched"):
+        C.replace(spark, stage, dest)
+    assert _ids(spark, dest) == [100, 101]
+    assert sorted(os.listdir(tmp_path)) == ["dest"]
+
+
+def test_replace_keeps_the_stage_when_the_restore_fails(
+    spark, tmp_path, fail_rename
+):
+    """When neither the swap nor the restore goes through, the stage
+    and ``__compact_old`` hold the only copies: both stay."""
+    stage, dest = str(tmp_path / "stage"), str(tmp_path / "dest")
+    _write(spark, dest, 2, start=100)
+    _write(spark, stage, 4)
+    fail_rename(2, 3)
+    with pytest.raises(OSError, match="failed too"):
+        C.replace(spark, stage, dest)
+    assert _ids(spark, dest + "__compact_old") == [100, 101]
+    assert _ids(spark, stage) == [0, 1, 2, 3]
 
 
 def test_replace_crash_between_renames_keeps_both_copies(
@@ -164,6 +195,8 @@ def test_layout_compact_keeps_data_under_rename_failure(
     with pytest.raises(OSError):
         compact(spark, path, target_file_mb=512)
     assert _ids(spark, path) == list(range(200))
+    # the failed swap drops its stage (<path>__compact_<id>)
+    assert os.listdir(tmp_path) == ["fragmented"]
 
 
 def test_run_merge_sink_keeps_data_under_rename_failure(
@@ -197,6 +230,10 @@ def test_run_merge_sink_keeps_data_under_rename_failure(
     ]
     rows = {(r.k, r.v) for r in spark.read.parquet(target).collect()}
     assert rows == {(1, "a0"), (2, "b0")}
+    # the failed swap drops its stage (<target>__m<id>)
+    assert [n for n in os.listdir(tmp_path) if n.startswith("target")] == [
+        "target"
+    ]
 
 
 def test_reader_sees_whole_snapshots_during_upserts(spark, tmp_path):
@@ -246,4 +283,38 @@ def test_only_the_commit_module_renames():
         for p in sorted(pkg.rglob("*.py"))
         if p != commit and re.search(r"\.rename\(", p.read_text())
     ]
+    assert offenders == []
+
+
+_HARNESS_MODULES = {"bench", "perfbench", "benchwindow", "baselinedoc"}
+_HARNESS_FILES = re.compile(r"bench_queries[\w.]*\.json|BASELINE\.md")
+
+
+def test_no_bench_harness_in_the_library():
+    """The library holds engine code only: no module imports a benchmark
+    harness, and none names a harness sidecar or BASELINE.md in a
+    string literal (docstrings may still point at the docs)."""
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "fugue_warehouses_spark"
+    offenders = []
+    for p in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(p.read_text())
+        docstrings = {
+            id(n.body[0].value)
+            for n in ast.walk(tree)
+            if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                              ast.AsyncFunctionDef))
+            and ast.get_docstring(n, clean=False) is not None
+        }
+        for node in ast.walk(tree):
+            names = []
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                names = [node.module or ""] + [a.name for a in node.names]
+            if any(set(n.split(".")) & _HARNESS_MODULES for n in names):
+                offenders.append(f"{p.relative_to(pkg)}:{node.lineno} imports {names}")
+            if (isinstance(node, ast.Constant) and isinstance(node.value, str)
+                    and id(node) not in docstrings
+                    and _HARNESS_FILES.search(node.value)):
+                offenders.append(f"{p.relative_to(pkg)}:{node.lineno} {node.value!r}")
     assert offenders == []

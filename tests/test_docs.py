@@ -1,68 +1,40 @@
-"""Round-artifact consistency: BASELINE.md / README.md vs the code.
-
-Three rounds in a row shipped one mechanical documentation slip each
-(stale claim, drifted numbers, a table splice that moved a status cell
-onto the wrong row). These tests make that whole class of error fail
-CI instead of recurring:
+"""Documentation consistency: BASELINE.md / README.md vs the code.
 
 - every markdown table row in BASELINE.md has exactly as many cells as
-  its own table header (the r5 splice dropped a cell from one row and
-  dangled it on another);
-- every query name in BASELINE.md's per-query table exists in the
-  query registry (stale/renamed rows fail);
-- README's advertised test count matches `pytest --collect-only`;
-- BASELINE's recorded Spark seconds stay within a stated tolerance of
-  the latest bench sidecar (`bench_queries.json`), honoring explicit
-  `lo-hi` bands — a silently drifted point value fails until it is
-  re-measured or banded.
+  its own table header (a splice that drops a cell from one row and
+  dangles it on another fails here);
+- README's advertised test count matches `pytest --collect-only`.
 
 No Spark session needed; the whole module runs in a few seconds.
 """
 
 from __future__ import annotations
 
-import json
 import re
 import subprocess
 import sys
 from pathlib import Path
 
-import pytest
-
 REPO = Path(__file__).resolve().parent.parent
 
-# The table scrape, the seconds-cell grammar, and the gate tolerances
-# moved to fugue_warehouses_spark.baselinedoc in round 11 so bench.py's
-# suspect re-check pass and this gate enforce the SAME thresholds
-# (VERDICT r10 wrong #2: they disagreed, and a row drifted past the
-# gate without ever being re-checked). The aliases keep this module's
-# test bodies readable.
-from fugue_warehouses_spark import baselinedoc as B  # noqa: E402
 
-POINT_TOLERANCE = B.POINT_TOLERANCE
-BAND_TOLERANCE = B.BAND_TOLERANCE
-
-
-def _baseline_text() -> str:
-    return (REPO / "BASELINE.md").read_text()
-
-
-def _table_blocks() -> list[list[list[str]]]:
-    return B.table_blocks(_baseline_text())
-
-
-def _table_rows() -> list[list[str]]:
-    return [cells for block in _table_blocks() for cells in block]
-
-
-def _is_separator(cells: list[str]) -> bool:
-    return B.is_separator(cells)
+def _table_blocks(text: str) -> list[list[list[str]]]:
+    """Contiguous runs of `|`-rows, one block per markdown table."""
+    blocks: list[list[list[str]]] = []
+    run: list[list[str]] = []
+    for line in text.splitlines() + [""]:
+        if line.lstrip().startswith("|"):
+            run.append([c.strip() for c in line.strip().strip("|").split("|")])
+        elif run:
+            blocks.append(run)
+            run = []
+    return blocks
 
 
 def test_baseline_tables_well_formed():
     """Each contiguous table block keeps ONE cell count — a row with a
-    missing or extra cell (the r5 splice) fails here."""
-    blocks = _table_blocks()
+    missing or extra cell fails here."""
+    blocks = _table_blocks((REPO / "BASELINE.md").read_text())
     assert blocks, "BASELINE.md has no tables?"
     for block in blocks:
         width = len(block[0])
@@ -71,60 +43,6 @@ def test_baseline_tables_well_formed():
                 f"table row has {len(cells)} cells, its header has "
                 f"{width}: {cells[:2]}..."
             )
-
-
-def _query_table_rows() -> list[list[str]]:
-    return B.query_table_rows(_baseline_text())
-
-
-def _query_name(cell: str) -> str:
-    return B.query_name(cell)
-
-
-def test_baseline_query_names_exist_in_registry():
-    from fugue_warehouses_spark.queries import QUERIES
-
-    rows = _query_table_rows()
-    assert len(rows) > 50  # the table really was found
-    missing = [
-        c[0] for c in rows if _query_name(c[0]) not in QUERIES
-    ]
-    assert not missing, f"BASELINE.md rows not in the registry: {missing}"
-
-
-def test_all_benched_queries_have_baseline_rows():
-    """Inverse of test_baseline_query_names_exist_in_registry (round-9,
-    VERDICT r8 #2): every query the bench sidecar records must have a
-    row in BASELINE.md's per-query table — otherwise the staleness
-    gate (which skips absent rows) can never flag it and its
-    performance can drift forever unnoticed (part_pagerank spent three
-    rounds as a hotspot with no band)."""
-    sidecar = REPO / "bench_queries.json"
-    if not sidecar.exists():
-        pytest.skip("no bench sidecar recorded yet")
-    bench = json.loads(sidecar.read_text())["queries"]
-    table = {_query_name(c[0]) for c in _query_table_rows()}
-    missing = sorted(q for q in bench if q not in table)
-    assert not missing, (
-        "benched queries without a BASELINE.md per-query row (add a "
-        f"DuckDB column + Spark band): {missing}"
-    )
-
-
-def test_baseline_regime_tags_valid():
-    """Every per-query row carries a regime tag the gate can scale by
-    (round 10): `cpu` rows track the numpy control across host
-    classes, `sched` rows the tpch control. An untagged or typo'd row
-    would silently fall out of the staleness gate's per-regime
-    scaling."""
-    from fugue_warehouses_spark.benchwindow import REGIME_CONTROL
-
-    bad = [
-        (c[0], c[4])
-        for c in _query_table_rows()
-        if c[4] not in REGIME_CONTROL
-    ]
-    assert not bad, f"rows with invalid regime tags: {bad}"
 
 
 def test_readme_test_count_matches_collection():
@@ -144,150 +62,3 @@ def test_readme_test_count_matches_collection():
         f"README claims {claimed} tests but pytest collects {collected} — "
         "update the README line when adding/removing tests"
     )
-
-
-def _parse_sec_cell(cell: str) -> tuple[float, float] | None:
-    return B.parse_sec_cell(cell)
-
-
-def test_baseline_spark_values_track_bench_sidecar():
-    """Every BASELINE per-query Spark-seconds claim must cover the
-    latest recorded bench value within tolerance: point claims may be
-    exceeded by at most POINT_TOLERANCE, explicit lo-hi bands by at
-    most BAND_TOLERANCE over the hi end — each scaled by the control
-    its row's REGIME actually resembles (round 10,
-    benchwindow.inflation_by_regime): `cpu` rows by the numpy ratio,
-    `sched` rows by the tpch ratio. One global max-of-both scalar let
-    the r9 slow class (numpy 4.0x, tpch faster than idle) tolerate ~8x
-    on scheduling rows whose measured path never degraded. A sidecar
-    whose controls classify the window DEGRADED (benchwindow.classify
-    — e.g. the r8 driver window whose jobfloor read 3.765 s while
-    tpch+numpy sampled clean) is REFUSED for comparison rather than
-    normalized: per-job burst regimes inflate individual rows 2-9x
-    non-uniformly, so no scalar tolerance makes the comparison
-    meaningful — and from round 10 bench.py quarantines such windows
-    to bench_queries.degraded.json, so this path only fires on a
-    hand-placed artifact. Queries absent from the sidecar
-    (prose-documented heavies) are skipped."""
-    from fugue_warehouses_spark import benchwindow
-
-    sidecar = REPO / "bench_queries.json"
-    if not sidecar.exists():
-        pytest.skip("no bench sidecar recorded yet")
-    data = json.loads(sidecar.read_text())
-    bench = data["queries"]
-    state, reasons = benchwindow.classify_sidecar(data)
-    if state == "degraded":
-        pytest.skip(
-            "bench sidecar was recorded in a DEGRADED host window "
-            f"({'; '.join(reasons)}); staleness cannot be assessed — "
-            "re-record on an idle host per BASELINE.md methodology"
-        )
-    stale = _stale_rows(data)
-    assert not stale, (
-        "stale BASELINE.md rows — re-measure idle warm best-of-N and "
-        "update, or convert to an explicit lo-hi band:\n" + "\n".join(stale)
-    )
-
-
-def _stale_rows(data: dict) -> list[str]:
-    """The gate's row check over a loaded sidecar dict: BASELINE rows
-    whose recorded bench value exceeds their per-regime-scaled
-    tolerance. Factored out so tests can replay historical windows."""
-    from fugue_warehouses_spark import benchwindow
-
-    bench = data["queries"]
-    infl = benchwindow.inflation_by_regime(
-        data.get("control"), data.get("control_end")
-    )
-    stale = []
-    for name, claim in B.query_claims(_baseline_text()).items():
-        if name not in bench:
-            continue
-        assert claim.regime in infl, (
-            f"{name}: unknown regime tag {claim.regime!r} (expected one "
-            f"of {sorted(infl)})"
-        )
-        # the SAME threshold arithmetic bench.py's re-check trigger
-        # uses (baselinedoc.gate_threshold) — the two consumers must
-        # never disagree again (VERDICT r10 wrong #2)
-        threshold = B.gate_threshold(claim, infl)
-        if bench[name] > threshold:
-            stale.append(
-                f"{name}: BASELINE claims {claim.lo}"
-                + (f"-{claim.hi}" if claim.is_band else "")
-                + f" but bench recorded {bench[name]} s "
-                f"(> {threshold:.2f}, regime={claim.regime})"
-            )
-    return stale
-
-
-def test_regime_gate_catches_sched_burst_even_with_steady_slow_numpy():
-    """VERDICT r9 wrong #3's exact blind spot, replayed: the r9
-    endnote's burst window carried events_running_totals at 0.953 s
-    (9x its scheduling floor). Under the old global-max scalar, a
-    steady-slow numpy control (4x) would have scaled EVERY row's
-    tolerance — a point row like events_running_totals tolerated
-    ~1.06 s and the burst passed. Per-regime scaling takes the tpch
-    control for sched rows, and tpch in that window read FASTER than
-    idle, so the burst row must now fail even though numpy is steady
-    and the window classifies clean."""
-    data = {
-        "queries": {"events_running_totals": 0.953},
-        # steady slow-class numpy at start AND end, jobfloor in band,
-        # tpch better than idle: classifies CLEAN (the steady
-        # slow-host exception), so only the per-regime gate stands
-        # between this row and a silent pass
-        "control": {
-            "numpy_matmul_sec": 0.040,
-            "tpch_scan_agg_sec": 0.273,
-            "jobfloor_32x_sec": 3.0,
-        },
-        "control_end": {"numpy_matmul_sec": 0.040, "jobfloor_32x_sec": 1.9},
-    }
-    from fugue_warehouses_spark import benchwindow
-
-    assert benchwindow.classify_sidecar(data)[0] == "clean"
-    stale = _stale_rows(data)
-    assert any("events_running_totals" in s for s in stale), (
-        "the burst row passed the gate — the sched regime must scale "
-        f"by tpch, not numpy (stale={stale})"
-    )
-    # sanity: the SAME reading would pass for a cpu-tagged row's
-    # tolerance, which is why the one-scalar gate missed it
-    assert benchwindow.inflation_by_regime(
-        data["control"], data["control_end"]
-    )["cpu"] == 4.0
-
-
-def test_window_history_last_row_matches_committed_sidecar():
-    """BASELINE.md's Window history table (round 11, VERDICT r10 #6)
-    must end with the committed sidecar's window: total, query count,
-    recheck count, and verdict. This makes recording a new window
-    without appending its history row a test failure — clean-window
-    drift stays visible in BASELINE.md itself, not in artifact
-    archaeology."""
-    from fugue_warehouses_spark import benchwindow
-
-    sidecar = REPO / "bench_queries.json"
-    if not sidecar.exists():
-        pytest.skip("no bench sidecar recorded yet")
-    data = json.loads(sidecar.read_text())
-
-    text = _baseline_text()
-    section = text.split("## Window history")[1].split("\n## ")[0]
-    rows = [
-        cells for cells in B.table_blocks(section)[0]
-        if len(cells) == 8 and not B.is_separator(cells)
-        and cells[0] != "window"
-    ]
-    assert rows, "Window history table missing or empty"
-    last = rows[-1]
-    assert float(last[1]) == data["value"], (
-        f"history's last total {last[1]} != sidecar {data['value']} — "
-        "append a row for the new window"
-    )
-    assert int(last[2]) == len(data["queries"])
-    assert int(last[6]) == len(data.get("recheck") or {})
-    state, _ = benchwindow.classify_sidecar(data)
-    assert last[7] == state

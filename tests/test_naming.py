@@ -92,14 +92,11 @@ def test_engine_accepts_tablename(spark, tmp_path):
 
 
 def test_registry_contract_integrity():
-    """Driver-contract invariants: every bench name resolves, every
-    oracle belongs to a registered query, and the only queries without
-    an oracle are the two random/approximate-by-design ones."""
-    from bench import BENCH_QUERIES
+    """Driver-contract invariants: every oracle belongs to a registered
+    query, and the only queries without an oracle are the two
+    random/approximate-by-design ones."""
     from fugue_warehouses_spark.queries import ORACLE, QUERIES
 
-    assert set(BENCH_QUERIES) <= set(QUERIES)
-    assert len(BENCH_QUERIES) == len(set(BENCH_QUERIES))  # no dupes
     assert set(ORACLE) <= set(QUERIES)
     assert set(QUERIES) - set(ORACLE) == {
         "orders_approx_distinct",
