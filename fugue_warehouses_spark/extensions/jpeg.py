@@ -294,56 +294,43 @@ def _unblockify(blocks: np.ndarray, bh: int, bw: int, h: int, w: int):
     return chan[:h, :w]
 
 
-def _encode_channel(blocks: np.ndarray, q: np.ndarray, dc_tab, ac_tab, bw,
-                    pred: int) -> int:
-    """FDCT + quantize + entropy-code one component's blocks into the
-    shared bit writer; returns the updated DC predictor."""
-    # vectorized FDCT over every block, then per-block entropy coding
-    coeffs = np.einsum("ux,nxy,vy->nuv", _DCT8, blocks - 128.0, _DCT8)
-    quant = np.round(coeffs / q).astype(np.int64)
-    flat = quant.reshape(-1, 64)[:, _ZIGZAG]
-    for row in flat:
-        dc = int(row[0])
-        cat, bits = _magnitude(dc - pred)
-        code, ln = dc_tab[cat]
+def _encode_block(row: np.ndarray, dc_tab, ac_tab, bw, pred: int) -> int:
+    """Entropy-code one block's zigzag-ordered quantized coefficients
+    into the shared bit writer; returns the updated DC predictor."""
+    dc = int(row[0])
+    cat, bits = _magnitude(dc - pred)
+    code, ln = dc_tab[cat]
+    bw.write(code, ln)
+    bw.write(bits, cat)
+    run = 0
+    last_nz = np.nonzero(row[1:])[0]
+    last = last_nz[-1] + 1 if len(last_nz) else 0
+    for k in range(1, last + 1):
+        v = int(row[k])
+        if v == 0:
+            run += 1
+            continue
+        while run > 15:
+            code, ln = ac_tab[0xF0]  # ZRL
+            bw.write(code, ln)
+            run -= 16
+        cat, bits = _magnitude(v)
+        code, ln = ac_tab[(run << 4) | cat]
         bw.write(code, ln)
         bw.write(bits, cat)
-        pred = dc
         run = 0
-        last_nz = np.nonzero(row[1:])[0]
-        last = last_nz[-1] + 1 if len(last_nz) else 0
-        for k in range(1, last + 1):
-            v = int(row[k])
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                code, ln = ac_tab[0xF0]  # ZRL
-                bw.write(code, ln)
-                run -= 16
-            cat, bits = _magnitude(v)
-            code, ln = ac_tab[(run << 4) | cat]
-            bw.write(code, ln)
-            bw.write(bits, cat)
-            run = 0
-        if last < 63:
-            code, ln = ac_tab[0x00]  # EOB
-            bw.write(code, ln)
-    return pred
+    if last < 63:
+        code, ln = ac_tab[0x00]  # EOB
+        bw.write(code, ln)
+    return dc
 
 
 def encode_jpeg(pixels: np.ndarray) -> bytes:
     """Baseline JFIF encode of an (h, w, 3) RGB or (h, w) grayscale
     uint8 array — 4:4:4, Annex K tables. Lossy (that is the point:
     the multimodal tests exercise a REAL lossy round trip)."""
-    pixels = np.asarray(pixels)
-    gray = pixels.ndim == 2
-    h, w = pixels.shape[:2]
-    if gray:
-        comps = [pixels.astype(np.float64)]
-    else:
-        ycc = _rgb_to_ycbcr(pixels)
-        comps = [ycc[..., 0], ycc[..., 1], ycc[..., 2]]
+    comps, gray = _quantized_components(pixels)
+    h, w = np.asarray(pixels).shape[:2]
 
     out = bytearray()
     out += b"\xff\xd8"  # SOI
@@ -378,20 +365,15 @@ def encode_jpeg(pixels: np.ndarray) -> bytes:
     dc_l, ac_l = _huff_codes(*_DC_L), _huff_codes(*_AC_L)
     dc_c, ac_c = _huff_codes(*_DC_C), _huff_codes(*_AC_C)
     bw = _BitWriter()
-    comp_blocks = []
-    for ci, chan in enumerate(comps):
-        blocks, bh, bwid = _blockify(chan)
-        comp_blocks.append(blocks.reshape(bh, bwid, 8, 8))
     # 4:4:4 interleave: one block per component per MCU, row-major
     preds = [0] * nc
-    bh, bwid = comp_blocks[0].shape[:2]
+    bh, bwid = comps[0].shape[:2]
     for by in range(bh):
         for bx in range(bwid):
             for ci in range(nc):
-                q = _QL if ci == 0 else _QC
                 dct, act = (dc_l, ac_l) if ci == 0 else (dc_c, ac_c)
-                preds[ci] = _encode_channel(
-                    comp_blocks[ci][by, bx][None], q, dct, act, bw, preds[ci]
+                preds[ci] = _encode_block(
+                    comps[ci][by, bx], dct, act, bw, preds[ci]
                 )
     out += bw.flush()
     out += b"\xff\xd9"  # EOI
@@ -838,11 +820,13 @@ def _prog_dc_scan_dispatch(br, scomps, cinfo, htabs, coefs, dims, hdims, Ah, Al)
 
 
 def _quantized_components(pixels: np.ndarray):
-    """Shared encode front half: blockify + FDCT + quantize each
+    """Shared encode front half of :func:`encode_jpeg` and
+    :func:`encode_jpeg_progressive`: blockify + FDCT + quantize each
     component (4:4:4 — same grid for all), returning zigzag-ordered
-    int coefficient arrays [bh, bw, 64] — the SAME values the baseline
-    encoder entropy-codes, which is what makes progressive-vs-baseline
-    decode identity a meaningful cross-check."""
+    int coefficient arrays [bh, bw, 64]. Both encoders entropy-code
+    these same arrays (a per-block FDCT can round a float tie at .5
+    the other way than this batched one), which is what makes
+    progressive-vs-baseline decode identity a meaningful cross-check."""
     pixels = np.asarray(pixels)
     gray = pixels.ndim == 2
     if gray:
@@ -856,16 +840,10 @@ def _quantized_components(pixels: np.ndarray):
         q = _QL if ci == 0 else _QC
         coeffs = np.einsum("ux,nxy,vy->nuv", _DCT8, blocks - 128.0, _DCT8)
         quant = np.round(coeffs / q).astype(np.int64)
-        out.append(quant.reshape(bh, bwid, 64)[..., _ZIGZAG_INV])
+        # _ZIGZAG maps zigzag slot -> natural index, so this gather
+        # puts each natural-order row in zigzag order
+        out.append(quant.reshape(bh, bwid, 64)[..., _ZIGZAG])
     return out, gray
-
-
-# zigzag PERMUTATION inverse: natural-order flat index -> zigzag slot.
-# _ZIGZAG maps zigzag slot -> natural index, so indexing a natural-
-# order row with _ZIGZAG yields zigzag order (as _encode_channel does
-# with `[:, _ZIGZAG]`); the named inverse here is just that same
-# gather, kept for readability at the [..., 64] shape.
-_ZIGZAG_INV = _ZIGZAG
 
 
 def _sos_header(scomps: list[tuple[int, int, int]], ss: int, se: int,

@@ -20,15 +20,18 @@ sortBeforeRepartition``, on by default so task retries are
 deterministic), which for document-sized rows costs more than the
 shuffle itself.
 
-The parallelism probe is CACHED per input file set —
-``df.rdd.getNumPartitions()`` builds a full QueryExecution plus
-the DataFrame→RDD conversion that is then discarded, so repeated
+The parallelism probe is CACHED per input file set and split
+settings — ``df.rdd.getNumPartitions()`` builds a full QueryExecution
+plus the DataFrame→RDD conversion that is then discarded, so repeated
 calls over the same table (every benchmark pass, every facet sharing a
 fixture) re-paid analysis for a number that only depends on the files
 and the split size. Scan split counts are a function of the file
-set + ``maxPartitionBytes``/``openCostInBytes`` (filters/projections
-don't change them; partition pruning changes ``inputFiles`` and hence
-the cache key). Any scan planned BELOW the core count is
+set + ``spark.sql.files.maxPartitionBytes`` / ``openCostInBytes`` /
+``minPartitionNum`` (unset, the last falls back to the session's
+default parallelism, fixed for its life), so all four form the cache
+key: a conf change probes again. Filters/projections don't change the
+count; partition pruning changes ``inputFiles`` and hence the key.
+Any scan planned BELOW the core count is
 repartitioned — the added exchange is cheap relative to an
 under-parallel per-row Python or regex stage, which is the only reason
 callers invoke this.
@@ -39,10 +42,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# (sorted input files) -> planned scan partition count; per-process,
-# like the session itself. Never keyed on data contents — it caches a
-# PLANNING property, not results.
-_nparts_cache: dict[tuple[str, ...], int] = {}
+_SPLIT_CONFS = tuple(
+    f"spark.sql.files.{k}"
+    for k in ("maxPartitionBytes", "openCostInBytes", "minPartitionNum")
+)
+
+# (sorted input files, split settings) -> planned scan partition count;
+# per-process, like the session itself. Never keyed on data contents —
+# it caches a PLANNING property, not results.
+_nparts_cache: dict[tuple[tuple[str, ...], tuple], int] = {}
 
 
 def fan_out_scan(df: DataFrame, key_col: str) -> DataFrame:
@@ -53,22 +61,24 @@ def fan_out_scan(df: DataFrame, key_col: str) -> DataFrame:
     Result-neutral by construction: callers apply per-row functions
     (or shuffling aggregations) downstream, so row placement cannot
     change any value. The ``rdd.getNumPartitions()`` probe plans the
-    query but runs no job, and is cached per input file set."""
-    sc = df.sparkSession.sparkContext
-    par = sc.defaultParallelism
+    query but runs no job, and is cached per input file set and split
+    settings."""
+    spark = df.sparkSession
+    par = spark.sparkContext.defaultParallelism
     try:
         files = tuple(sorted(df.inputFiles()))
     except Exception:
         files = ()
-    if files and files in _nparts_cache:
-        nparts = _nparts_cache[files]
+    key = (files, tuple(spark.conf.get(k, None) for k in _SPLIT_CONFS))
+    if files and key in _nparts_cache:
+        nparts = _nparts_cache[key]
     else:
         try:
             nparts = df.rdd.getNumPartitions()
         except Exception:
             return df
         if files:
-            _nparts_cache[files] = nparts
+            _nparts_cache[key] = nparts
     if nparts >= par:
         return df
     return df.repartition(par, F.col(key_col))

@@ -1501,6 +1501,33 @@ def doc_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.select("id_a", "id_b", F.round("jaccard_sim", 6).alias("jaccard_sim"))
 
 
+def _jaccard_pairs_cte(on: str) -> str:
+    """DuckDB CTEs ending in ``p(id_a, id_b, jac)``: the document pairs
+    ``a``/``b`` that satisfy ``on`` with exact 5-gram Jaccard >= 0.6.
+
+    An inverted index, one row per (doc, distinct gram) self-joined on
+    the gram, counts each pair's intersection, so only pairs sharing a
+    gram are formed (the rest have Jaccard 0). A closure oracle over
+    the 500 fixture documents takes ~0.6 s this way against 60-130 s
+    for the all-pairs ``list_intersect`` form, with identical rows
+    (DuckDB 1.0, 2 threads). ``p`` is MATERIALIZED because the closure
+    oracles read it more than once."""
+    return f"""grams AS MATERIALIZED (
+      SELECT doc_id, len(g) AS n, unnest(g) AS gram FROM (
+        SELECT doc_id, list_distinct(list_transform(
+          generate_series(1, greatest(length(text) - 4, 1)),
+          i -> substring(text, i, 5))) AS g
+        FROM documents)),
+    p AS MATERIALIZED (
+      SELECT * FROM (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+               round(count(*)::DOUBLE
+                     / (any_value(a.n) + any_value(b.n) - count(*)), 6) AS jac
+        FROM grams a JOIN grams b ON a.gram = b.gram AND {on}
+        GROUP BY a.doc_id, b.doc_id)
+      WHERE jac >= 0.6)"""
+
+
 # Exact all-pairs 5-gram Jaccard — the *verified output* of the
 # MinHash-LSH pipeline is SQL-expressible even though the banding is
 # not: LSH only prunes candidates, and verification recomputes exact
@@ -1510,19 +1537,9 @@ def doc_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # output equals the exact all-pairs result. documents.text is pure
 # ASCII in the fixtures, so DuckDB char 5-grams == the numpy path's
 # byte 5-grams.
-_MINHASH_EXACT_SQL = """
-    WITH g AS (
-      SELECT doc_id, list_distinct(list_transform(
-        generate_series(1, greatest(length(text) - 4, 1)),
-        i -> substring(text, i, 5))) AS grams
-      FROM documents)
-    SELECT id_a, id_b, jaccard_sim FROM (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             round(len(list_intersect(a.grams, b.grams))::DOUBLE
-                   / (len(a.grams) + len(b.grams)
-                      - len(list_intersect(a.grams, b.grams))), 6) AS jaccard_sim
-      FROM g a JOIN g b ON a.doc_id < b.doc_id)
-    WHERE jaccard_sim >= 0.6
+_MINHASH_EXACT_SQL = f"""
+    WITH {_jaccard_pairs_cte("a.doc_id < b.doc_id")}
+    SELECT id_a, id_b, jac AS jaccard_sim FROM p
     """
 
 
@@ -1601,31 +1618,23 @@ def doc_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return DD.near_dup_pairs_simhash(docs, "doc_id", "text", max_hamming=3, bands=4)
 
 
-# Connected components over the exact near-dup pair graph, as a
-# recursive transitive closure: component = min reachable id; keep one
-# representative (the min id) per component plus all unpaired docs.
-# Fine for the oracle because fixture components are tiny near-cliques;
-# the Spark side uses shuffle-only label propagation for scale.
-_NEAR_DEDUP_RESOLVED_SQL = """
-    WITH RECURSIVE g AS (
-      SELECT doc_id, list_distinct(list_transform(
-        generate_series(1, greatest(length(text) - 4, 1)),
-        i -> substring(text, i, 5))) AS grams
-      FROM documents),
-    p AS (
-      SELECT id_a, id_b FROM (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               round(len(list_intersect(a.grams, b.grams))::DOUBLE
-                     / (len(a.grams) + len(b.grams)
-                        - len(list_intersect(a.grams, b.grams))), 6) AS jac
-        FROM g a JOIN g b ON a.doc_id < b.doc_id)
-      WHERE jac >= 0.6),
+# The exact near-dup pair graph and its recursive transitive closure
+# reach(a, b), shared by the three near-dedup oracles below. Fine for
+# an oracle because fixture components are tiny near-cliques; the
+# Spark side uses shuffle-only label propagation for scale.
+_NEAR_DUP_CLOSURE = f"""
+    WITH RECURSIVE {_jaccard_pairs_cte("a.doc_id < b.doc_id")},
     sym AS (
       SELECT id_a AS a, id_b AS b FROM p
       UNION SELECT id_b, id_a FROM p),
     reach(a, b) AS (
       SELECT a, b FROM sym
-      UNION SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
+      UNION SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a)"""
+
+
+# Component = min reachable id; keep one representative (the min id)
+# per component plus all unpaired docs.
+_NEAR_DEDUP_RESOLVED_SQL = _NEAR_DUP_CLOSURE + """,
     comp AS (SELECT a AS id, min(b) AS m FROM reach GROUP BY a)
     SELECT doc_id, source FROM documents
     WHERE doc_id NOT IN (SELECT id FROM comp WHERE m < id)
@@ -1646,26 +1655,7 @@ def doc_near_dedup_resolved(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the longest document (ties -> min id) — and the output carries each
 # survivor's component size. comp = min reachable id including self,
 # so grouping by it enumerates full component membership.
-_NEAR_DEDUP_CANONICAL_SQL = """
-    WITH RECURSIVE g AS (
-      SELECT doc_id, list_distinct(list_transform(
-        generate_series(1, greatest(length(text) - 4, 1)),
-        i -> substring(text, i, 5))) AS grams
-      FROM documents),
-    p AS (
-      SELECT id_a, id_b FROM (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               round(len(list_intersect(a.grams, b.grams))::DOUBLE
-                     / (len(a.grams) + len(b.grams)
-                        - len(list_intersect(a.grams, b.grams))), 6) AS jac
-        FROM g a JOIN g b ON a.doc_id < b.doc_id)
-      WHERE jac >= 0.6),
-    sym AS (
-      SELECT id_a AS a, id_b AS b FROM p
-      UNION SELECT id_b, id_a FROM p),
-    reach(a, b) AS (
-      SELECT a, b FROM sym
-      UNION SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
+_NEAR_DEDUP_CANONICAL_SQL = _NEAR_DUP_CLOSURE + """,
     comp AS (SELECT a AS id, least(a, min(b)) AS comp FROM reach GROUP BY a),
     ranked AS (
       SELECT c.id, c.comp,
@@ -1690,26 +1680,7 @@ _NEAR_DEDUP_CANONICAL_SQL = """
 # docs' tokens, min-id survivor convention). comp includes self, so
 # grouping by it enumerates full membership; singletons are docs
 # absent from the pair graph.
-_DUP_CLUSTER_SIZES_SQL = """
-    WITH RECURSIVE g AS (
-      SELECT doc_id, list_distinct(list_transform(
-        generate_series(1, greatest(length(text) - 4, 1)),
-        i -> substring(text, i, 5))) AS grams
-      FROM documents),
-    p AS (
-      SELECT id_a, id_b FROM (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               round(len(list_intersect(a.grams, b.grams))::DOUBLE
-                     / (len(a.grams) + len(b.grams)
-                        - len(list_intersect(a.grams, b.grams))), 6) AS jac
-        FROM g a JOIN g b ON a.doc_id < b.doc_id)
-      WHERE jac >= 0.6),
-    sym AS (
-      SELECT id_a AS a, id_b AS b FROM p
-      UNION SELECT id_b, id_a FROM p),
-    reach(a, b) AS (
-      SELECT a, b FROM sym
-      UNION SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
+_DUP_CLUSTER_SIZES_SQL = _NEAR_DUP_CLOSURE + """,
     comp AS (SELECT a AS id, least(a, min(b)) AS comp FROM reach GROUP BY a),
     tok AS (
       SELECT doc_id,
@@ -4802,21 +4773,10 @@ def doc_near_dup_signature_estimate(
     )
 
 
-_INCR_NEAR_DEDUP_SQL = """
-    WITH g AS (
-      SELECT doc_id, list_distinct(list_transform(
-        generate_series(1, greatest(length(text) - 4, 1)),
-        i -> substring(text, i, 5))) AS grams
-      FROM documents)
-    SELECT id_new, id_match, jaccard_sim FROM (
-      SELECT a.doc_id AS id_new, b.doc_id AS id_match,
-             round(len(list_intersect(a.grams, b.grams))::DOUBLE
-                   / (len(a.grams) + len(b.grams)
-                      - len(list_intersect(a.grams, b.grams))), 6) AS jaccard_sim
-      FROM g a JOIN g b
-        ON a.doc_id % 5 = 4
-       AND (b.doc_id % 5 <> 4 OR b.doc_id < a.doc_id))
-    WHERE jaccard_sim >= 0.6
+_INCR_NEAR_DEDUP_SQL = f"""
+    WITH {_jaccard_pairs_cte(
+        "a.doc_id % 5 = 4 AND (b.doc_id % 5 <> 4 OR b.doc_id < a.doc_id)")}
+    SELECT id_a AS id_new, id_b AS id_match, jac AS jaccard_sim FROM p
     """
 
 

@@ -18,12 +18,54 @@ Design-for-scale notes (local[32] test rig, 1000-executor target):
   DuckDB oracle.
 - shuffle.partitions default sized for the local rig; real clusters
   should raise it (or rely on AQE coalescing from a high initial).
+
+Warm-pass defaults. On small inputs the per-call costs of the session
+(Janino codegen, the HotSpot JIT behind it, Py4J round trips) outweigh
+the operators' own work, so the session lets a repeated query reuse
+what its first run paid for:
+- ``spark.sql.codegen.cache.maxEntries`` 4000 (Spark: 100). One
+  ``query_mix`` benchmark pass needs ~260 generated classes; under the
+  100-entry LRU every warm pass recompiled nearly all of them.
+- ``spark.sql.codegen.useIdInClassName`` false. The whole-stage codegen
+  stage id is otherwise part of the generated class body and so of the
+  cache key, and AQE numbers stages in the order they become ready: on
+  4 task threads a warm re-run of five registry queries still compiled
+  4 classes now and then, and 0 with this off.
+- ``spark.python.sql.dataFrameDebugging.enabled`` false. With it on,
+  every ``Column`` method and ``functions.*`` call runs
+  ``getActiveSession``, a ``conf.get``, ``PySparkCurrentOrigin.set`` and
+  ``clear`` and a Python stack walk, which about doubles the Py4J round
+  trips of building a plan. The trade: a runtime error no longer names
+  the Python call site in its "DataFrame context"; for plans the library
+  builds, that site points into library internals anyway.
+- ``get_spark`` keeps the JVM method handles that PySpark resolves by
+  reflection on every ``functions.*`` call and list-to-Seq conversion
+  (``_cache_jvm_lookups``): a reflection round trip for the class and
+  another for the method, each time.
+Measured on the ``query_mix`` benchmark (4 vCPU, untraced, seeds 1-5,
+order alternating per seed), against the session without these four:
+``pass_s`` median 7.61 -> 5.33 s (-30%; -22 to -37% per seed),
+``setup_s`` 24.6 -> 22.3 s, ``peak_rss_mb`` 3046 -> 3012. Traced (seed
+3): ``codegen.compiles`` 260.5 -> 0 a pass, ``engine.build_s`` 2.27 ->
+1.52 s, ``exec_s`` 6.40 -> 5.01 s, ``jvm.jit_s`` 10.1 -> 8.6 CPU-s,
+Spark jobs, stages and tasks unchanged. Building one warm pass sends
+~9600 Py4J commands, ~7900 with the lookups kept, ~2800 with the
+debugging flag off as well.
+To get call-site capture back, pass
+``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+to ``get_spark``. Two caveats: the cache size is a static conf, read
+only when the session is created, so ``getOrCreate`` on a live session
+keeps the old size; and PySpark reads the debugging flag once per
+Python process, at the first ``Column`` or ``functions.*`` call made
+with an active session, and keeps that answer for the life of the
+process.
 """
 
 from __future__ import annotations
 
 import os
 
+from py4j.java_gateway import JavaClass, JavaMember
 from pyspark.sql import SparkSession
 
 def _default_driver_mem() -> str:
@@ -107,6 +149,16 @@ _DEFAULT_CONF: dict[str, str] = {
     # numpy temps heap-resident; glibc reads these at process start
     "spark.executorEnv.MALLOC_MMAP_THRESHOLD_": str(1 << 30),
     "spark.executorEnv.MALLOC_TRIM_THRESHOLD_": str(1 << 30),
+    # warm passes reuse their generated classes: a query_mix pass needs
+    # ~260, Spark's default LRU of 100 recompiled nearly all of them
+    # (see "Warm-pass defaults" above)
+    "spark.sql.codegen.cache.maxEntries": "4000",
+    # keep the codegen stage id out of the generated class body, so the
+    # cache key does not depend on the order AQE plans query stages in
+    "spark.sql.codegen.useIdInClassName": "false",
+    # no per-call origin capture on Column / functions.* calls: halves
+    # the Py4J round trips of building a plan (see "Warm-pass defaults")
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 
@@ -130,6 +182,41 @@ def pinned_heap_conf() -> dict[str, str]:
     # inside foreachBatch (the 320k ingest probe). 16 MB per
     # thread is noise against the pinned heap.
     return {"spark.driver.extraJavaOptions": f"-Xms{mem} -Xss16m"}
+
+
+class _StaticMethodCache(JavaClass):
+    """A py4j ``JavaClass`` that keeps the static-method handles it
+    resolves. The plain ``JavaClass`` asks the JVM again (one reflection
+    round trip) on every attribute access; a method handle holds only
+    the class and method names, so one serves the life of the gateway.
+    Fields are not kept: their values can change."""
+
+    def __getattr__(self, name):
+        member = super().__getattr__(name)
+        if isinstance(member, JavaMember):
+            self.__dict__[name] = member
+        return member
+
+
+# the JVM classes PySpark resolves on every ``functions.*`` call and
+# every list-to-Seq conversion, by full name and by the short name that
+# the gateway's imports allow
+_HOT_CLASSES = (
+    "org.apache.spark.sql.functions",
+    "org.apache.spark.api.python.PythonUtils",
+    "org.apache.spark.sql.api.python.PythonSQLUtils",
+)
+
+
+def _cache_jvm_lookups(jvm) -> None:
+    """Pin a :class:`_StaticMethodCache` per hot class on the gateway's
+    ``JVMView``: an instance attribute wins over ``JVMView.__getattr__``,
+    so PySpark's lookups by these names stop costing a reflection round
+    trip for the class and another for the method."""
+    for fqn in _HOT_CLASSES:
+        cls = _StaticMethodCache(fqn, jvm._gateway_client)
+        setattr(jvm, fqn, cls)
+        setattr(jvm, fqn.rsplit(".", 1)[1], cls)
 
 
 def get_spark(
@@ -164,7 +251,9 @@ def get_spark(
         conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    _cache_jvm_lookups(spark.sparkContext._jvm)
+    return spark
 
 
 def stop_spark() -> None:

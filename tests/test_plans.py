@@ -85,6 +85,55 @@ def test_aqe_enabled_in_session(spark):
     assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
 
 
+def test_warm_rerun_compiles_no_generated_code(spark, sf_dir):
+    """A second run of the same queries finds every generated class in
+    Spark's codegen cache: no plan embeds a per-call literal or a fresh
+    expression id, the codegen stage id stays out of the class body,
+    and the cache holds the working set. Also pins the warm-pass
+    session defaults."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "4000"
+    assert spark.conf.get("spark.sql.codegen.useIdInClassName") == "false"
+    assert (
+        spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    )
+    names = ("q1_pricing_summary", "q5_local_supplier_volume",
+             "doc_bpe_encode", "doc_bm25_search", "embedding_topk")
+    compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    counts = []
+    for _ in range(2):
+        before = compiles.getCount()
+        for name in names:
+            QUERIES[name](spark, sf_dir).collect()
+        counts.append(compiles.getCount() - before)
+    assert counts[1] == 0, counts
+
+
+def test_rebuilding_an_expression_asks_the_jvm_no_reflection(
+    spark, monkeypatch
+):
+    """get_spark keeps the static-method handles of the classes behind
+    ``functions.*`` and list-to-Seq conversion, so building the same
+    Column tree again sends only calls, no reflection lookup ("r")."""
+    client = spark.sparkContext._jvm._gateway_client
+    send = client.send_command
+    sent: list[str] = []
+
+    def counting(command, *args, **kwargs):
+        sent.append(command.split("\n", 1)[0])
+        return send(command, *args, **kwargs)
+
+    def build():
+        return F.concat_ws("-", F.upper(F.col("a")), F.array("b", "c"))
+
+    build()
+    monkeypatch.setattr(client, "send_command", counting)
+    build()
+    assert "c" in sent and "r" not in sent, sent
+
+
 def test_exact_dedup_is_single_shuffle_with_group_limit(spark, sf_dir):
     """Fingerprint dedup: one shuffle on the fingerprint, and Spark's
     WindowGroupLimit applies rank<=1 partially BEFORE the exchange, so
@@ -570,3 +619,39 @@ def test_retrieval_eval_has_no_matched_set_ranking_window(spark, sf_dir):
 
     n_windows = len(re.findall(r"\bWindow\b", simple))
     assert n_windows <= 2, (n_windows, "unexpected extra ranking windows")
+
+
+def test_fan_out_scan_probes_again_after_a_split_conf_change(
+    spark, tmp_path, monkeypatch
+):
+    """The cached scan-parallelism probe is keyed on the split settings
+    as well as the file set: with minPartitionNum at 1, eight small
+    files pack into one split under a 128 MB maxPartitionBytes and into
+    eight under 1 MB, so a count cached under one setting would be
+    stale under the other."""
+    from fugue_warehouses_spark.plans import scanout
+
+    path = str(tmp_path / "t")
+    spark.range(800).repartition(8).write.parquet(path)
+    cls = type(spark.read.parquet(path))
+    rdd = cls.rdd
+    probes: list[int] = []
+
+    def counting(self):
+        out = rdd.__get__(self, cls)
+        probes.append(out.getNumPartitions())
+        return out
+
+    monkeypatch.setattr(cls, "rdd", property(counting))
+    max_bytes = "spark.sql.files.maxPartitionBytes"
+    min_num = "spark.sql.files.minPartitionNum"
+    before = spark.conf.get(max_bytes)
+    spark.conf.set(min_num, "1")
+    try:
+        for size in ("134217728", "1048576", "134217728"):
+            spark.conf.set(max_bytes, size)
+            scanout.fan_out_scan(spark.read.parquet(path), "id")
+    finally:
+        spark.conf.set(max_bytes, before)
+        spark.conf.unset(min_num)
+    assert probes == [1, 8]
